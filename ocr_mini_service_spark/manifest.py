@@ -7,7 +7,7 @@ counts — service.ts:184-186) and commit lineage, enabling idempotent resume.
 Layout (parquet emulation of an Iceberg snapshot — an Iceberg catalog slots in
 behind the same two functions when its runtime jar is on the cluster):
 
-    <output>/bucket=<k>/part-*.parquet     data, one bucket per task
+    <output>/bucket=<k>/part-*.parquet     data, one file per bucket
     <output>/_manifest/part-*.parquet      append-only manifest rows
 
 Partitioning strategy (north rule): bucket = pmod(xxhash64(conv_id, salt), N)
@@ -16,12 +16,18 @@ conversation's turns in at most S buckets (mostly co-located) while the salt
 bounds the skew of pathologically long conversations — a 10^6-turn
 conversation spreads over S tasks instead of serializing one (SURVEY.md §4.2).
 
+The bucket is the commit and resume unit, not the task unit: the write job
+range-partitions the pending buckets onto ``n_tasks`` contiguous ranges sized
+by input bytes (``write_task_count``), so every bucket still lands in exactly
+one task and one file, while small inputs do not pay a Python task per bucket.
+
 Crash atomicity: data files are committed by Spark's parquet commit protocol;
-manifest rows are appended only AFTER the data write returns, and metrics are
-aggregated from the committed files themselves (read-back), so a manifest row
-is always backed by data.  A crash between data and manifest re-runs that
-bucket; dynamic partition overwrite makes the re-run idempotent (no
-duplicates).
+manifest rows are appended only AFTER the data write returns.  By default the
+per-bucket metrics are accumulator tallies riding that same write action
+(``metrics_source="readback"`` aggregates them from the committed files
+instead), so a manifest row is always backed by committed data.  A crash
+between data and manifest re-runs that bucket; dynamic partition overwrite
+makes the re-run idempotent (no duplicates).
 """
 
 from __future__ import annotations
@@ -29,11 +35,13 @@ from __future__ import annotations
 import contextlib
 import datetime
 import json
+import math
 import threading
 import time
+from collections.abc import Collection
 
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_fused
@@ -41,6 +49,16 @@ from .schema import EXTRACTED, TRANSCRIPTS
 from .sources import DEFAULT_IO, TableIO
 
 SALT_FACTOR = 32
+
+# Input bytes one Python write task is sized for.  Every Python task pays a
+# fixed ≈0.3 s on PySpark 4.1 however little it does; 16 MiB of transcripts
+# is ≈20k turns, seconds of kernel time per task, so that cost stays a few
+# percent while a retried or straggling task stays small.  On a 4-vCPU VM
+# with 32 buckets, median wall time: 10k turns (8.1 MB) get 4 tasks, 2.6 s
+# against 6.3 s at 32 tasks (3 runs each); 200k turns (161 MB) get 10
+# tasks, 41.9 s against 44.0 s (8 runs each, ±5 s run to run).
+# At cluster scale the count caps at n_buckets, one task per bucket.
+TASK_BYTES = 16 << 20
 
 # extracted table + the hive partition column, for inference-free read-back
 from pyspark.sql.types import (  # noqa: E402
@@ -87,14 +105,14 @@ def bucket_expr(n_buckets: int, salt_factor: int = SALT_FACTOR):
 def read_manifest(
     spark: SparkSession, output: str, io: TableIO = DEFAULT_IO
 ) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return io.read(spark, f"{output}/_manifest")
-    except AnalysisException:
-        # no manifest yet (fresh run); corruption raises a different error —
-        # it must surface, not silently reset resume bookkeeping
+    """The manifest rows, or None when no manifest part has been committed.
+    Existence is checked on the storage side, not by letting a Spark read
+    fail (a failed read makes Spark's observation listener log an ERROR);
+    a corrupt part still raises."""
+    path = f"{output}/_manifest"
+    if not io.exists(spark, path):
         return None
+    return io.read(spark, path)
 
 
 def committed_buckets(
@@ -253,6 +271,52 @@ class _BucketMetricsParam(AccumulatorParam):
         return a
 
 
+def write_task_count(
+    input_bytes: int, n_buckets: int, pending_buckets: int, parallelism: int
+) -> int:
+    """Python tasks for the write job: enough for ``TASK_BYTES`` of pending
+    input each, at least the parallelism, at most one per bucket."""
+    want = math.ceil(input_bytes * pending_buckets / n_buckets / TASK_BYTES)
+    return min(n_buckets, max(parallelism, want))
+
+
+def bucketed_write_plan(
+    transcripts: DataFrame,
+    n_buckets: int,
+    n_tasks: int,
+    skipped: Collection[int] = (),
+    salt_factor: int = SALT_FACTOR,
+    bucket_accum=None,
+    observation=None,
+) -> DataFrame:
+    """The batch job's plan, up to the partitioned write.
+
+    One shuffle on the small input side (raw turns), none on the fat output
+    side.  Range partitioning on the bucket id keeps every bucket inside one
+    of ``n_tasks`` contiguous ranges, so partitionBy still writes one file
+    per bucket; the sort gives the stable turn order within each bucket and
+    declares the ordering the partitionBy writer needs, so the writer does
+    not insert its own partition-column sort."""
+    df = transcripts.withColumn("bucket", bucket_expr(n_buckets, salt_factor))
+    if skipped:
+        df = df.filter(~F.col("bucket").isin(*[int(b) for b in skipped]))
+    extracted = extract_fused(
+        df.repartitionByRange(n_tasks, "bucket"), bucket_accum=bucket_accum
+    ).withColumn("bucket", bucket_expr(n_buckets, salt_factor))
+    if observation is not None:
+        # task-side observed metrics riding the write action (zero extra
+        # jobs) — the analog of the reference's SSE progress events
+        # (image-recognition.service.ts:310-312; SURVEY.md §2.1 S7 / §2.4 A3)
+        extracted = extracted.observe(
+            observation,
+            F.count(F.lit(1)).alias("n_turns"),
+            F.sum("n_blocks_kept").alias("n_words_kept"),
+            F.sum("n_blocks_dropped").alias("n_words_dropped"),
+            F.count("error").alias("n_errors"),
+        )
+    return extracted.sortWithinPartitions("bucket", "conv_id", "turn_idx")
+
+
 def run_with_manifest(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -291,12 +355,11 @@ def run_with_manifest(
             f"n_buckets={persisted} (or clear the output)"
         )
     if n_buckets is None:
-        # 8 task waves per slot: with only 2 waves (the old 2x default) a
-        # straggler in the last wave idles the whole executor fleet behind
-        # it — measured 1.37x end-to-end at local[32] when moving 64 -> 256
-        # buckets on the 600k-turn bench input (tools/profile_scaling.py,
-        # BENCH/BASELINE.md "thread-scaling attribution").  Finer buckets
-        # also shrink the per-bucket retry unit for resume.
+        # 8 buckets per slot: finer buckets shrink the per-bucket retry unit
+        # for resume.  The write's task count is sized separately
+        # (write_task_count); the 1.37x measured at local[32] for 64 -> 256
+        # buckets on 600k turns (tools/profile_scaling.py, BENCH/BASELINE.md
+        # "thread-scaling attribution") came from task waves, not buckets.
         n_buckets = (
             persisted
             if persisted is not None
@@ -307,48 +370,30 @@ def run_with_manifest(
 
     started_at = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
 
-    df = transcripts.withColumn("bucket", bucket_expr(n_buckets, salt_factor))
-    skipped: set[int] = set()
-    if resume:
-        skipped = committed_buckets(spark, output, io=io)
-        if skipped:
-            df = df.filter(~F.col("bucket").isin(*[int(b) for b in skipped]))
+    skipped: set[int] = committed_buckets(spark, output, io=io) if resume else set()
+    # the planner's size estimate (file bytes for a scan): no Spark job
+    input_bytes = transcripts._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    n_tasks = write_task_count(
+        int(input_bytes),
+        n_buckets,
+        n_buckets - len(skipped),
+        spark.sparkContext.defaultParallelism,
+    )
 
-    # One shuffle on the small input side (raw turns), none on the fat output
-    # side: each task then owns whole buckets → one file per bucket via
-    # partitionBy, sorted by the stable turn order within each (the explicit
-    # sort also declares the ordering the partitionBy writer needs, so the
-    # writer does not insert its own partition-column sort).
     t0 = time.time()
-    df = df.repartition(n_buckets, "bucket")
     accum = (
         spark.sparkContext.accumulator({}, _BucketMetricsParam())
         if metrics_source == "accumulator"
         else None
     )
-    extracted = extract_fused(df, bucket_accum=accum).withColumn(
-        "bucket", bucket_expr(n_buckets, salt_factor)
-    )
-    # task-side observed metrics riding the write action (zero extra jobs) —
-    # the analog of the reference's SSE progress events
-    # (image-recognition.service.ts:310-312; SURVEY.md §2.1 S7 / §2.4 A3)
-    from pyspark.sql import Observation
-
     obs = Observation("extract")
-    observed = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum("n_blocks_kept").alias("n_words_kept"),
-        F.sum("n_blocks_dropped").alias("n_words_dropped"),
-        F.count("error").alias("n_errors"),
+    plan = bucketed_write_plan(
+        transcripts, n_buckets, n_tasks, skipped, salt_factor,
+        bucket_accum=accum, observation=obs,
     )
     with _emit_progress(spark, output):
         io.write(
-            observed.sortWithinPartitions("bucket", "conv_id", "turn_idx"),
-            output,
-            partition_by=("bucket",),
-            mode="overwrite",
-            dynamic=True,
+            plan, output, partition_by=("bucket",), mode="overwrite", dynamic=True
         )
     observed_metrics = obs.get
     t_write = time.time() - t0
@@ -414,9 +459,10 @@ def run_with_manifest(
         "buckets_done": len({r["bucket"] for r in rows}),
         "buckets_skipped": len(skipped),
         "n_buckets": n_buckets,
-        "t_write": round(t_write, 2),
-        "t_metrics": round(t_metrics, 2),
-        "t_manifest": round(time.time() - t0, 2),
+        "n_tasks": n_tasks,
+        "t_write": t_write,
+        "t_metrics": t_metrics,
+        "t_manifest": time.time() - t0,
         "observed": observed_metrics,
     }
 

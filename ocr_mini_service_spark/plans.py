@@ -4,7 +4,8 @@ engine's key plans and assert the properties the 100 TB design depends on
 
 - the fused extraction hot path contains NO Exchange (zero-shuffle, scales
   linearly with executors);
-- the batch job's only Exchange is the input-side bucket repartition;
+- the batch job's only Exchange is the input-side range repartition of
+  the bucket ids;
 - validation predicates reach the parquet scan (``PushedFilters``) and scans
   read only the projected columns (``ReadSchema``);
 - small dims join as BroadcastHashJoin, the overlap prune is a true
@@ -36,7 +37,7 @@ def plan_report(spark, sf_dir: str) -> dict[str, tuple[str, str]]:
     """name → (annotation, formatted plan) for the plans worth reading."""
     import __spark_entry__ as entry
 
-    from .manifest import bucket_expr
+    from .manifest import bucketed_write_plan
     from .pipeline import extract_fused
     from .synth import gen_transcripts
 
@@ -46,11 +47,7 @@ def plan_report(spark, sf_dir: str) -> dict[str, tuple[str, str]]:
     transcripts = spark.createDataFrame(pdf)
 
     fused = extract_fused(transcripts)
-    job = extract_fused(
-        transcripts.withColumn("bucket", bucket_expr(64)).repartition(64, "bucket")
-    ).withColumn("bucket", bucket_expr(64)).sortWithinPartitions(
-        "bucket", "conv_id", "turn_idx"
-    )
+    job = bucketed_write_plan(transcripts, 64, spark.sparkContext.defaultParallelism)
 
     return {
         "extract_fused (hot path)": (
@@ -60,8 +57,9 @@ def plan_report(spark, sf_dir: str) -> dict[str, tuple[str, str]]:
             formatted_plan(fused),
         ),
         "batch job (bucketed + sorted commit)": (
-            "exactly ONE Exchange — the input-side repartition onto "
-            "pmod(xxhash64(conv_id, salt), 64) buckets; the fat nested output is "
+            "exactly ONE Exchange — the input-side range repartition of the "
+            "pmod(xxhash64(conv_id, salt), 64) bucket ids onto contiguous "
+            "per-task ranges (one file per bucket); the fat nested output is "
             "never shuffled, only sorted within partitions for the stable "
             "(conv_id, turn_idx) order.",
             formatted_plan(job),

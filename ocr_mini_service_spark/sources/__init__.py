@@ -14,6 +14,8 @@ seam via ``load``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -53,6 +55,16 @@ class TableIO:
     def append(self, df: DataFrame, location: str) -> None:
         raise NotImplementedError
 
+    def exists(self, spark: SparkSession, location: str) -> bool:
+        """Whether ``location`` holds a readable table, checked without
+        running a Spark read."""
+        raise NotImplementedError
+
+
+def _visible(name: str) -> bool:
+    # Spark's file index skips names starting with "_" or "."
+    return not name.startswith(("_", "."))
+
 
 class ParquetIO(TableIO):
     """Plain-parquet emulation of an Iceberg table: hive partition dirs +
@@ -84,6 +96,23 @@ class ParquetIO(TableIO):
 
     def append(self, df: DataFrame, location: str) -> None:
         df.write.mode("append").parquet(location)
+
+    def exists(self, spark: SparkSession, location: str) -> bool:
+        """At least one visible file under ``location``: ``os`` for local
+        paths, the Hadoop FileSystem (through the JVM) for remote ones."""
+        if "://" in location and not location.startswith("file://"):
+            return hadoop_has_visible_files(spark, location)
+        local = location[len("file://"):] if location.startswith("file://") else location
+        return os.path.isdir(local) and any(_visible(n) for n in os.listdir(local))
+
+
+def hadoop_has_visible_files(spark: SparkSession, location: str) -> bool:
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(location)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(path) and any(
+        _visible(st.getPath().getName()) for st in fs.listStatus(path)
+    )
 
 
 class IcebergIO(TableIO):
@@ -157,6 +186,9 @@ class IcebergIO(TableIO):
 
     def append(self, df: DataFrame, location: str) -> None:
         df.writeTo(location).append()
+
+    def exists(self, spark: SparkSession, location: str) -> bool:
+        return spark.catalog.tableExists(location)
 
 
 def write_bucketed(

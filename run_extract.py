@@ -27,7 +27,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--output", required=True, help="extracted output path")
     p.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
     p.add_argument("--buckets", type=int, default=None,
-                   help="conv_id hash buckets for output partitioning/resume (default: 8x parallelism)")
+                   help="conv_id hash buckets: the output partitions, one file "
+                        "each, and the resume unit (default: 8x parallelism); "
+                        "the write's task count is sized from the input bytes")
     p.add_argument("--synth", type=int, default=None,
                    help="generate a deterministic synthetic input of N turns at --input first")
     p.add_argument("--resume", action="store_true",
@@ -73,6 +75,7 @@ def main(argv: list[str] | None = None) -> int:
         "n_turns": n,
         "buckets_done": stats["buckets_done"],
         "buckets_skipped": stats["buckets_skipped"],
+        "n_tasks": stats["n_tasks"],
         "wall_sec": round(wall, 2),
         "turns_per_sec": round(n / wall, 1) if wall > 0 else None,
         "output": args.output,

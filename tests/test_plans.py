@@ -6,7 +6,7 @@ import re
 import pytest
 
 import __spark_entry__ as entry
-from ocr_mini_service_spark.manifest import bucket_expr
+from ocr_mini_service_spark.manifest import bucketed_write_plan
 from ocr_mini_service_spark.pipeline import extract_fused
 from ocr_mini_service_spark.plans import formatted_plan
 from ocr_mini_service_spark.synth import gen_transcripts
@@ -23,13 +23,14 @@ def test_fused_hot_path_has_no_exchange(spark, transcripts):
 
 
 def test_batch_job_has_exactly_one_exchange(spark, transcripts):
-    job = extract_fused(
-        transcripts.withColumn("bucket", bucket_expr(64)).repartition(64, "bucket")
-    ).withColumn("bucket", bucket_expr(64)).sortWithinPartitions(
-        "bucket", "conv_id", "turn_idx"
-    )
-    plan = formatted_plan(job)
+    """The production write plan (the one run_with_manifest executes): one
+    Exchange, range partitioning of the bucket id onto n_tasks ranges."""
+    n_tasks = 3
+    plan = formatted_plan(bucketed_write_plan(transcripts, 64, n_tasks))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    assert re.search(
+        rf"rangepartitioning\(bucket#\d+ ASC NULLS FIRST, {n_tasks}\)", plan
+    ), plan
 
 
 def test_admission_filter_pushes_predicates_and_prunes_columns(spark, sf_dir):

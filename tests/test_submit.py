@@ -72,9 +72,13 @@ def test_sigkill_mid_write_then_resume_no_dupes_no_gaps(tmp_path):
     # under .spark-staging-<jobid>), then SIGKILL the whole JVM
     # mid-flight — no shutdown hooks, no committer cleanup.  Gating on
     # the staging dir rather than a fixed post-launch sleep keeps the
-    # kill point deterministic as hardware speeds up.
+    # kill point deterministic as hardware speeds up.  Any other entry
+    # (``_manifest/`` holds the progress log from before the write, and
+    # before the range-partition sampling job) does not count.
     def _write_started() -> bool:
-        return os.path.isdir(out) and bool(os.listdir(out))
+        return os.path.isdir(out) and any(
+            n.startswith(".spark-staging-") for n in os.listdir(out)
+        )
 
     deadline = time.time() + 180
     while time.time() < deadline and not _write_started():
