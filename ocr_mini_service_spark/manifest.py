@@ -51,13 +51,16 @@ from .sources import DEFAULT_IO, TableIO
 SALT_FACTOR = 32
 
 # Input bytes one Python write task is sized for.  Every Python task pays a
-# fixed ≈0.3 s on PySpark 4.1 however little it does; 16 MiB of transcripts
-# is ≈20k turns, seconds of kernel time per task, so that cost stays a few
-# percent while a retried or straggling task stays small.  On a 4-vCPU VM
-# with 32 buckets, median wall time: 10k turns (8.1 MB) get 4 tasks, 2.6 s
-# against 6.3 s at 32 tasks (3 runs each); 200k turns (161 MB) get 10
-# tasks, 41.9 s against 44.0 s (8 runs each, ±5 s run to run).
-# At cluster scale the count caps at n_buckets, one task per bucket.
+# fixed ≈0.3 s on PySpark 4.1 however little it does, so small inputs must
+# not pay one task per bucket.  16 MiB (≈20k turns) is an estimate, not a
+# tuned value.  On a 4-vCPU VM with 32 buckets, median wall time: at 10k
+# turns (8.1 MB) the parallelism floor decides (4 tasks, 2.6 s against 6.3 s
+# at 32 tasks, 3 runs each), so TASK_BYTES has no effect there; at 200k
+# turns (161 MB) its 10 tasks (41.9 s) were within the ±5 s run-to-run drift
+# of 32 tasks (44.0 s, 8 runs each) and of the 4-task floor (31.7, 38.9 s).
+# The runs are in CHANGES.md.  Unverified above 200k turns: re-derive it once
+# a benchmark workload falls between the floor and the cap.  At cluster
+# scale the count caps at n_buckets, one task per bucket.
 TASK_BYTES = 16 << 20
 
 # extracted table + the hive partition column, for inference-free read-back

@@ -14,8 +14,6 @@ seam via ``load``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -61,11 +59,6 @@ class TableIO:
         raise NotImplementedError
 
 
-def _visible(name: str) -> bool:
-    # Spark's file index skips names starting with "_" or "."
-    return not name.startswith(("_", "."))
-
-
 class ParquetIO(TableIO):
     """Plain-parquet emulation of an Iceberg table: hive partition dirs +
     dynamic partition overwrite give the same idempotent-recommit semantics
@@ -98,21 +91,18 @@ class ParquetIO(TableIO):
         df.write.mode("append").parquet(location)
 
     def exists(self, spark: SparkSession, location: str) -> bool:
-        """At least one visible file under ``location``: ``os`` for local
-        paths, the Hadoop FileSystem (through the JVM) for remote ones."""
-        if "://" in location and not location.startswith("file://"):
-            return hadoop_has_visible_files(spark, location)
-        local = location[len("file://"):] if location.startswith("file://") else location
-        return os.path.isdir(local) and any(_visible(n) for n in os.listdir(local))
-
-
-def hadoop_has_visible_files(spark: SparkSession, location: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(location)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.exists(path) and any(
-        _visible(st.getPath().getName()) for st in fs.listStatus(path)
-    )
+        """At least one visible file under ``location``, resolved through the
+        Hadoop FileSystem with the session's Hadoop conf, exactly as Spark's
+        reader resolves it (a path without a scheme is relative to
+        ``fs.defaultFS``)."""
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(location)
+        fs = path.getFileSystem(conf)
+        # Spark's file index skips names starting with "_" or "."
+        return fs.exists(path) and any(
+            not st.getPath().getName().startswith(("_", "."))
+            for st in fs.listStatus(path)
+        )
 
 
 class IcebergIO(TableIO):

@@ -1,7 +1,8 @@
 """The manifest job's write tasks are sized by input bytes while the bucket
 stays the commit and resume unit: one file per bucket, the same manifest rows
-at any task count, and resume-state reads that neither start a Spark job nor
-log an ERROR when no manifest exists yet."""
+at any task count, and resume-state reads that find the manifest where
+Spark's writer put it, and neither run a Spark read nor log an ERROR when no
+manifest exists yet."""
 
 import datetime
 import glob
@@ -24,7 +25,7 @@ from ocr_mini_service_spark.manifest import (
     run_with_manifest,
     write_task_count,
 )
-from ocr_mini_service_spark.sources import hadoop_has_visible_files
+from ocr_mini_service_spark.sources import DEFAULT_IO, ParquetIO
 from ocr_mini_service_spark.synth import write_transcripts_parquet
 
 MIB = 1 << 20
@@ -109,28 +110,34 @@ def test_tasks_sized_by_bytes_one_file_per_bucket(spark, tmp_path, inp, monkeypa
     assert _manifest_rows(outs["resumed"]) == rows
 
 
-def test_missing_manifest_is_none_without_a_spark_job(spark, tmp_path):
+def test_missing_manifest_is_none_without_a_spark_read(spark, tmp_path, monkeypatch):
+    reads = []
+    real_read = ParquetIO.read
+
+    def spy_read(self, spark, location, schema=None):
+        reads.append(location)
+        return real_read(self, spark, location, schema)
+
+    monkeypatch.setattr(ParquetIO, "read", spy_read)
     # a run killed before its first commit leaves only the progress log
     killed = tmp_path / "killed"
     (killed / "_manifest").mkdir(parents=True)
     (killed / "_manifest" / "_progress.jsonl").write_text('{"type": "progress"}\n')
+    # regression guard only: a failed read also starts no job
     st = spark.sparkContext.statusTracker()
     before = set(st.getJobIdsForGroup())
-    for out in (str(tmp_path / "absent"), str(killed), f"file://{killed}"):
+    for out in (str(tmp_path / "absent"), str(killed), f"file://{killed}", f"file:{killed}"):
         assert read_manifest(spark, out) is None
         assert committed_buckets(spark, out) == set()
         assert persisted_n_buckets(spark, out) is None
-    # the remote-filesystem branch, through the Hadoop FileSystem API
-    assert not hadoop_has_visible_files(spark, f"file://{tmp_path}/absent/_manifest")
-    assert not hadoop_has_visible_files(spark, f"file://{killed}/_manifest")
+    assert reads == []
     assert set(st.getJobIdsForGroup()) == before
 
     (killed / "_manifest" / "part-0.parquet").write_bytes(b"")
-    assert hadoop_has_visible_files(spark, f"file://{killed}/_manifest")
+    assert DEFAULT_IO.exists(spark, f"file:{killed}/_manifest")
 
 
-def test_truncated_manifest_part_raises(spark, tmp_path):
-    out = str(tmp_path / "out")
+def _commit_one_manifest_row(spark, out: str) -> None:
     now = datetime.datetime.now(datetime.timezone.utc)
     row = Row(
         bucket=0, status="completed", n_turns=3, n_words_kept=5,
@@ -138,6 +145,34 @@ def test_truncated_manifest_part_raises(spark, tmp_path):
         committed_at=now, n_buckets=8,
     )
     manifest._append_manifest(spark, out, [row], manifest._MANIFEST_SCHEMA)
+
+
+def test_manifest_found_where_spark_resolves_the_path(spark, tmp_path):
+    """A path without a scheme is resolved against fs.defaultFS, as Spark's
+    writer resolves it, not looked up on the driver's local disk.  A viewfs
+    mount stands in for a remote default filesystem: /data is tmp_path."""
+    _commit_one_manifest_row(spark, str(tmp_path / "out"))
+    conf = {
+        "fs.defaultFS": "viewfs://t/",
+        "fs.viewfs.mounttable.t.link./data": f"file://{tmp_path}",
+        "fs.viewfs.impl.disable.cache": "true",
+    }
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        assert not os.path.exists("/data/out")
+        assert committed_buckets(spark, "/data/out") == {0}
+        assert persisted_n_buckets(spark, "/data/out") == 8
+    finally:
+        for k in conf:
+            spark.conf.unset(k)
+    # the one-slash form Hadoop prints for local paths
+    assert committed_buckets(spark, f"file:{tmp_path}/out") == {0}
+
+
+def test_truncated_manifest_part_raises(spark, tmp_path):
+    out = str(tmp_path / "out")
+    _commit_one_manifest_row(spark, out)
     assert committed_buckets(spark, out) == {0}
     (part,) = glob.glob(f"{out}/_manifest/part-*.parquet")
     with open(part, "r+b") as f:
