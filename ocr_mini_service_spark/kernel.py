@@ -1,6 +1,12 @@
-"""Pure-Python semantics kernel — the single source of truth for per-turn
-extraction semantics, shared by (a) the Spark pandas-UDF kernels in
-``pipeline.py`` and (b) the serial fixture oracle in ``oracle.py``.
+"""Pure-Python per-turn semantics kernel: the serial oracle.
+
+``extract_turn`` is what ``oracle.py`` runs and what every Spark path is
+checked against.  The production path (``columnar.extract_batch``) computes
+the same output a whole Arrow batch at a time and calls ``extract_turn`` only
+as its fallback, for turns whose shape it does not model; it also reuses
+``parse_codes``, ``det_id`` and ``validate_language``.  The relational path
+in ``pipeline.py`` calls the parse and reading-order functions from inside
+its operators.
 
 Every function re-derives (NOT copies) the behavior of the reference
 service at ``/root/reference``:

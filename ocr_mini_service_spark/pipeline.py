@@ -1,11 +1,12 @@
 """The extraction pipeline, in two equivalent Spark expressions.
 
 1. ``extract_fused`` — the production path for 10^12-turn scale: one narrow
-   ``mapInPandas`` pass (scan → Arrow-batched kernel → write).  Zero shuffles,
+   ``mapInArrow`` pass (scan → columnar kernel → write).  Zero shuffles,
    embarrassingly parallel, scales linearly with executors; the greedy
    reading-order clustering (order-dependent, not window-expressible —
    /root/reference/src/types/parse-tsv-output.function.ts:208-250) lives
-   inside the Arrow kernel.
+   inside the columnar kernel (``columnar.py``), which extracts a whole Arrow
+   batch at a time.
 
 2. ``extract_relational`` — the same semantics decomposed into native Spark
    operators (block explode → filter/project/normalize → dims equi-join →
@@ -14,8 +15,10 @@
    prove each reference operator has a faithful Catalyst expression and (b)
    cross-check the fused path; both must match the serial oracle bit-for-bit.
 
-Both paths share the pure-Python kernel in ``kernel.py`` — one source of
-truth for the reference semantics.
+The per-turn kernel in ``kernel.py`` is the serial oracle both paths are
+checked against.  The fused path calls it only for the turns the columnar
+kernel hands back (its fallback) and for ``parse_codes``; the relational
+path calls its parse and reading-order functions from inside its operators.
 """
 
 from __future__ import annotations
@@ -34,13 +37,11 @@ from pyspark.sql.types import (
 )
 
 from . import kernel
-from .schema import CODE, EXTRACTED, SPAN, WORD
+from .schema import EXTRACTED, WORD
 
 # ---------------------------------------------------------------------------
 # Fused path
 # ---------------------------------------------------------------------------
-
-_EXTRACTED_COLS = [f.name for f in EXTRACTED.fields]
 
 
 def _arrow_extracted_schema():
@@ -54,60 +55,32 @@ def _arrow_extracted_schema():
 
 
 def _fused_arrow_batches(batches, bucket_accum=None):
-    """Arrow-native kernel driver: RecordBatch in → RecordBatch out.
-
-    Emitting the result directly as pyarrow arrays (typed, columnar) bypasses
-    the pandas→Arrow serializer, which dominates wall-clock for this nested
-    output schema (arrays of word/span/code structs) — measured 2-3× the
-    kernel cost itself on the 32-core build machine.  The pass-through key
-    columns (conv_id, turn_idx) are reused from the input batch zero-copy
-    instead of being rebuilt from Python values.
+    """Arrow-native driver: each input RecordBatch goes through the columnar
+    kernel (``columnar.extract_batch``) and comes out as one EXTRACTED
+    RecordBatch, without pandas.
 
     When ``bucket_accum`` is given (and the input batch carries a ``bucket``
     column), per-bucket extraction metrics are tallied task-side into the
-    accumulator — see ``extract_fused``."""
-    import pyarrow as pa
+    accumulator from the output's count and error columns — see
+    ``extract_fused``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from . import columnar
 
     schema = _arrow_extracted_schema()
-    types = [f.type for f in schema]
     for batch in batches:
-        in_names = set(batch.schema.names)
-        conv_col, turn_col = batch.column("conv_id"), batch.column("turn_idx")
-        langs = (
-            batch.column("lang").to_pylist()
-            if "lang" in in_names
-            else [None] * batch.num_rows
-        )
-        rows = [
-            kernel.extract_turn(c, t, x, tl, lg)
-            for c, t, x, tl, lg in zip(
-                conv_col.to_pylist(),
-                turn_col.to_pylist(),
-                batch.column("text").to_pylist(),
-                batch.column("tool").to_pylist(),
-                langs,
-            )
-        ]
-        if bucket_accum is not None and "bucket" in in_names:
-            agg: dict[int, list] = {}
-            for b, r in zip(batch.column("bucket").to_pylist(), rows):
-                m = agg.get(b)
-                if m is None:
-                    m = agg[b] = [0, 0, 0, 0]
-                m[0] += 1
-                m[1] += r["n_blocks_kept"]
-                m[2] += r["n_blocks_dropped"]
-                m[3] += 1 if r["error"] is not None else 0
-            bucket_accum.add({b: tuple(m) for b, m in agg.items()})
-        arrays = []
-        for name, typ in zip(_EXTRACTED_COLS, types):
-            if name == "conv_id" and conv_col.type == typ:
-                arrays.append(conv_col)
-            elif name == "turn_idx" and turn_col.type == typ:
-                arrays.append(turn_col)
-            else:
-                arrays.append(pa.array([r[name] for r in rows], type=typ))
-        yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+        out = columnar.extract_batch(batch, schema)
+        if bucket_accum is not None and "bucket" in batch.schema.names:
+            buckets, which = np.unique(batch.column("bucket").to_numpy(), return_inverse=True)
+            tallies = [np.bincount(which, weights=w, minlength=len(buckets)).astype(np.int64)
+                       for w in (None,
+                                 out.column("n_blocks_kept").to_numpy(),
+                                 out.column("n_blocks_dropped").to_numpy(),
+                                 pc.is_valid(out.column("error")).to_numpy(zero_copy_only=False))]
+            bucket_accum.add({int(b): tuple(int(t[i]) for t in tallies)
+                              for i, b in enumerate(buckets.tolist())})
+        yield out
 
 
 def extract_fused(transcripts: DataFrame, bucket_accum=None) -> DataFrame:
