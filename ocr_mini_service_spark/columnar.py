@@ -222,10 +222,7 @@ def _parse_words(text, parse: np.ndarray):
 
 def _group_sums(values: np.ndarray, first: np.ndarray, size: np.ndarray) -> np.ndarray:
     """Sum of each group ``values[first[g] : first[g] + size[g]]``, added left
-    to right one member at a time: the rounding of Python 3.11's ``sum()``
-    over the group, which the per-turn kernel uses.  (Python 3.12 and later
-    sum floats with compensation; tests/test_columnar.py pins this to the
-    running interpreter.)"""
+    to right one member at a time, as ``kernel._baseline_sum`` does."""
     sums = values[first].copy()
     for r in range(1, int(size.max(initial=1))):
         act = size > r

@@ -4,8 +4,7 @@ src/ocr/image-recognition.service.ts:25, 61-67, 189-214): one row per
 partition-bucket with status, extraction metrics (blocks kept/dropped, error
 counts — service.ts:184-186) and commit lineage, enabling idempotent resume.
 
-Layout (parquet emulation of an Iceberg snapshot — an Iceberg catalog slots in
-behind the same two functions when its runtime jar is on the cluster):
+Layout (plain parquet, read and written through ``sources.TableIO``):
 
     <output>/bucket=<k>/part-*.parquet     data, one file per bucket
     <output>/_manifest/part-*.parquet      append-only manifest rows
@@ -361,8 +360,8 @@ def run_with_manifest(
         # 8 buckets per slot: finer buckets shrink the per-bucket retry unit
         # for resume.  The write's task count is sized separately
         # (write_task_count); the 1.37x measured at local[32] for 64 -> 256
-        # buckets on 600k turns (tools/profile_scaling.py, BENCH/BASELINE.md
-        # "thread-scaling attribution") came from task waves, not buckets.
+        # buckets on 600k turns (BENCH/BASELINE.md "thread-scaling
+        # attribution") came from task waves, not buckets.
         n_buckets = (
             persisted
             if persisted is not None
