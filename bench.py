@@ -399,7 +399,7 @@ def main() -> None:
     eff_exec = statistics.median(ratios) / 4.0
     # thread-pair transparency points, WAVE-MATCHED: 8 task waves per slot
     # count on both sides (64 buckets / 8 slots, 256 / 32).  The r4
-    # profiling session (tools/profile_scaling.py) attributed most of the
+    # profiling session attributed most of the
     # historical 8->32 gap (0.52 measured vs 0.80 busy ceiling) to wave
     # quantization: the fixed 64-bucket job is 8 waves at local[8] but only
     # 2 waves at local[32], where one straggler in the last wave idles up
@@ -505,7 +505,7 @@ probes, and the used-round indices are in the bench JSON
 ## Thread-scaling attribution (round-4 profiling session)
 
 The historical local[8]->local[32] gap (0.52 measured in r3 vs the 0.80
-busy-loop ceiling) was profiled with ``tools/profile_scaling.py``: five
+busy-loop ceiling) was profiled (a since-removed tools script): five
 configurations interleaved over 3 rounds on the same 600k-turn input, each
 session warm-up + best-of-2, all at 32 cores unless noted.  Median ratio
 vs the baseline (local[32], 64 buckets, arrow batch 2048):

@@ -19,49 +19,11 @@ shuffling only the skinny exploded rows on the turn key.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
-from . import kernel
-
-# kind='b' rows are exploded layout blocks (raw pixel ints ≅ TesseractTsvLineData,
-# parse-tsv-output.function.ts:113-126); kind='m' is the one per-turn meta row
-# carrying the page dims of the level-1 lookup (null when the parse failed).
-_RAW = StructType(
-    [StructField("conv_id", StringType(), False),
-     StructField("turn_idx", IntegerType(), False),
-     StructField("kind", StringType(), False),
-     StructField("line_no", IntegerType(), True)]
-    + [StructField(c, DoubleType(), True)
-       for c in ("level", "block_num", "par_num", "line_num", "word_num",
-                 "left_px", "top_px", "width_px", "height_px", "conf_raw")]
-    + [StructField("text", StringType(), True),
-       StructField("page_w", DoubleType(), True),
-       StructField("page_h", DoubleType(), True)]
-)
-
-_RAW_COLS = [f.name for f in _RAW.fields]
-
-
-def _emit_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: list[dict] = []
-        for c, t, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-            t = int(t)
-            try:
-                pw, ph, rows = kernel.parse_tsv_blocks(text)
-            except Exception:  # branch isolation (image-recognition.service.ts:165-168)
-                pw, ph, rows = None, None, []
-            out.append({"conv_id": c, "turn_idx": t, "kind": "m", "page_w": pw, "page_h": ph})
-            for r in rows:
-                out.append({"conv_id": c, "turn_idx": t, "kind": "b", **r})
-        yield pd.DataFrame(out, columns=_RAW_COLS)
-
+from .pipeline import _RAW, _emit_blocks
 
 _LEVELS = [
     # (kind, TSV level, grouping keys within a turn, child kind)
@@ -126,12 +88,35 @@ def _children(child_rows: DataFrame, parent_keys: list[str]) -> DataFrame:
     )
 
 
-def _flat(raw: DataFrame) -> dict[str, DataFrame]:
-    """The rollup's per-level frames — one row per element with ``conv_id,
-    turn_idx, <keys>, emit_ord, id, content, left, top, width, height,
-    child_ids`` for kinds ``line`` / ``paragraph`` / ``block`` — over the
-    block emission ``raw``, which feeds four consumers (words + three level
-    subtrees)."""
+def hierarchy_flat(
+    transcripts: DataFrame,
+    _cache_out: list | None = None,
+    persist: bool | str = True,
+) -> dict[str, DataFrame]:
+    """The rollup's FLAT per-level frames — one row per element with
+    ``conv_id, turn_idx, <keys>, emit_ord, id, content, left, top, width,
+    height, child_ids`` for kinds ``line`` / ``paragraph`` / ``block``.
+
+    This is the cheap surface: consumers that want flat element tables
+    (the driver queries ``hierarchy_lines`` / ``hierarchy_parents``) read
+    these directly instead of paying for the per-turn array assembly +
+    spine joins of ``extract_hierarchy`` and then exploding the arrays
+    right back (measured ~2x of the warm wall-clock at sf0.1).
+
+    The shared block-emission pass feeds FOUR consumers (words + three
+    level subtrees), so without sharing it recomputes 4×.  ``persist``
+    semantics as in ``extract_hierarchy``."""
+    raw = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
+        _emit_blocks, schema=_RAW
+    )
+    if persist == "checkpoint":
+        raw = raw.localCheckpoint()
+    elif persist:
+        raw = raw.persist()  # at cluster scale use StorageLevel.MEMORY_AND_DISK
+        # or materialize the blocks table instead
+        if _cache_out is not None:
+            _cache_out.append(raw)
+
     # parse-stage words (level 5, trimmed non-blank) with kernel-compatible
     # ids; content = the trimmed word text (the leaf of the rollup)
     words = raw.filter(
@@ -181,13 +166,19 @@ def _flat(raw: DataFrame) -> dict[str, DataFrame]:
     return flat
 
 
-def _rollup(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """``(hierarchy, raw)``: the rollup and the persisted block emission it
-    shares between its levels, for the caller to unpersist."""
-    raw = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        _emit_blocks, schema=_RAW
-    ).persist()
-    flat = _flat(raw)
+def extract_hierarchy(
+    transcripts: DataFrame,
+    _cache_out: list | None = None,
+    persist: bool | str = True,
+) -> DataFrame:
+    """transcripts → one row per turn: blocks / paragraphs / lines arrays of
+    ``struct<id, content, left, top, width, height, child_ids>`` in document
+    order.  ``content`` is the element's aggregated text (line = space-joined
+    child words, paragraph = joined lines, block = joined paragraphs — the
+    ``StructureContent`` payload of ``OCRHierarchyElement``).  Built on
+    ``hierarchy_flat`` (which holds the sharing/persist contract); this
+    wrapper adds the per-turn document-order array assembly + turn spine."""
+    flat = hierarchy_flat(transcripts, _cache_out=_cache_out, persist=persist)
     per_level: dict[str, DataFrame] = {}
     for kind, _level, _keys, _child in _LEVELS:
         per_level[kind] = (
@@ -231,21 +222,14 @@ def _rollup(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.coalesce("lines", F.expr(empty)).alias("lines"),
         )
     )
-    return out, raw
-
-
-def extract_hierarchy(transcripts: DataFrame) -> DataFrame:
-    """transcripts → one row per turn: blocks / paragraphs / lines arrays of
-    ``struct<id, content, left, top, width, height, child_ids>`` in document
-    order.  ``content`` is the element's aggregated text (line = space-joined
-    child words, paragraph = joined lines, block = joined paragraphs — the
-    ``StructureContent`` payload of ``OCRHierarchyElement``).  The shared
-    block emission stays cached; ``write_hierarchy`` releases it."""
-    return _rollup(transcripts)[0]
+    return out
 
 
 def write_hierarchy(transcripts: DataFrame, path: str) -> None:
-    """Materialize the rollup and release the shared block-emission cache."""
-    df, raw = _rollup(transcripts)
+    """Materialize the rollup and release the shared block-emission cache
+    (the extract_hierarchy docstring's unpersist contract)."""
+    cache: list = []
+    df = extract_hierarchy(transcripts, _cache_out=cache)
     df.write.mode("overwrite").parquet(path)
-    raw.unpersist()
+    for c in cache:
+        c.unpersist()

@@ -4,8 +4,9 @@
 checked against.  The production path (``columnar.extract_batch``) computes
 the same output a whole Arrow batch at a time and calls ``extract_turn`` only
 as its fallback, for turns whose shape it does not model; it also reuses
-``parse_codes``, ``det_id`` and ``validate_language``.  The hierarchy
-rollup calls ``parse_tsv_blocks``.
+``parse_codes``, ``det_id`` and ``validate_language``.  The relational path
+in ``pipeline.py`` calls the parse and reading-order functions from inside
+its operators.
 
 Every function re-derives (NOT copies) the behavior of the reference
 service at ``/root/reference``:
@@ -49,6 +50,10 @@ DESCENDER_FACTOR = 0.23
 
 # Baseline grouping tolerance (parse-tsv-output.function.ts:209)
 BASELINE_TOLERANCE = 0.0025
+
+# Regex char-class equivalent of DESCENDER_CHARS, usable in Spark F.rlike /
+# pandas str.contains.  ']' '[' '(' ')' '{' '}' escaped for regex safety.
+DESCENDER_REGEX = "[gjpqyçģķļąęįųșț" "ŋɟʝɡɣʄȷ" ",;‚„¿" r"\(\)\[\]\{\}" "∫∮∂ƒ₍₎₤₺₥₰]"
 
 # Per-turn language option (ocr.service.ts:149-153: `language: string = 'deu'`,
 # passed to the engine as `-l <lang>`, '+'-combinable e.g. 'deu+eng';
@@ -148,7 +153,7 @@ def det_id(*parts: Any) -> str:
 
 
 def parse_tsv_blocks(tsv_content: str) -> tuple[float, float, list[dict]]:
-    """Raw-block parse behind the hierarchy rollup.
+    """Raw-block parse shared by the fused and relational Spark paths.
 
     Mirror of ocr.service.ts:263-293 guards + parse-tsv-output.function.ts
     :134-170 minus normalization/word-filter.  Returns
@@ -203,14 +208,15 @@ def parse_tsv_blocks(tsv_content: str) -> tuple[float, float, list[dict]]:
 
 def parse_tsv_words(tsv_content: str) -> list[dict]:
     """Word-level parse — parse-tsv-output.function.ts:134-196 minus the
-    reading-order sort (``reading_order``): normalize coords by page dims,
-    conf/100, keep level-5 non-blank rows, compute baseline.
+    reading-order sort (applied separately so the relational path can
+    interpose native operators): normalize coords by page dims, conf/100,
+    keep level-5 non-blank rows, compute baseline.
 
-    Variant of ``parse_tsv_blocks`` + filter: numeric fields of non-word rows
-    are never observable in the output (the reference parses then discards
-    them), so only the level column is parsed before the level-5/non-blank
-    filter.  tests/test_hierarchy.py checks that the extracted word ids are
-    among the ids the blocks-based rollup gives."""
+    Hot-path variant of ``parse_tsv_blocks`` + filter: numeric fields of
+    non-word rows are never observable in the output (the reference parses
+    then discards them), so only the level column is parsed before the
+    level-5/non-blank filter.  tests/test_pipeline.py pins equality between
+    this path, the blocks-based relational path, and the oracle."""
     if tsv_content is None or len(tsv_content) == 0:
         return []  # ocr.service.ts:271-274 empty file
     lines = tsv_content.strip().split("\n")

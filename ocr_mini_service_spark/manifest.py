@@ -4,7 +4,8 @@ src/ocr/image-recognition.service.ts:25, 61-67, 189-214): one row per
 partition-bucket with status, extraction metrics (blocks kept/dropped, error
 counts — service.ts:184-186) and commit lineage, enabling idempotent resume.
 
-Layout (plain parquet, read and written through ``sources.TableIO``):
+Layout (parquet emulation of an Iceberg snapshot — an Iceberg catalog slots in
+behind the same two functions when its runtime jar is on the cluster):
 
     <output>/bucket=<k>/part-*.parquet     data, one file per bucket
     <output>/_manifest/part-*.parquet      append-only manifest rows

@@ -1,9 +1,9 @@
 """Serial fixture oracle (SURVEY.md §5.2 item 1).
 
 Runs the pure-Python semantics kernel row-by-row over a transcripts pandas
-DataFrame — no Spark — producing the golden ``extracted`` rows that the
-Spark path (``extract_fused``, batch or streaming) must match per-turn under
-stable (conv_id, turn_idx) ordering.
+DataFrame — no Spark — producing the golden ``extracted`` rows that every
+Spark path (fused mapInPandas, relational operator pipeline, streaming) must
+match per-turn under stable (conv_id, turn_idx) ordering.
 """
 
 from __future__ import annotations

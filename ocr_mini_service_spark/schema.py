@@ -10,6 +10,7 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -25,6 +26,27 @@ TRANSCRIPTS = StructType(
         StructField("text", StringType(), True),
         StructField("tool", StringType(), True),
         StructField("ts", TimestampType(), True),
+    ]
+)
+
+# Exploded per-turn layout elements ≅ TesseractTsvLineData
+# (/root/reference/src/types/parse-tsv-output.function.ts:113-126)
+BLOCKS = StructType(
+    [
+        StructField("conv_id", StringType(), False),
+        StructField("turn_idx", IntegerType(), False),
+        StructField("level", IntegerType(), True),
+        StructField("page_num", IntegerType(), True),
+        StructField("block_num", IntegerType(), True),
+        StructField("par_num", IntegerType(), True),
+        StructField("line_num", IntegerType(), True),
+        StructField("word_num", IntegerType(), True),
+        StructField("left", DoubleType(), True),
+        StructField("top", DoubleType(), True),
+        StructField("width", DoubleType(), True),
+        StructField("height", DoubleType(), True),
+        StructField("conf", DoubleType(), True),
+        StructField("text", StringType(), True),
     ]
 )
 
@@ -74,5 +96,22 @@ EXTRACTED = StructType(
         StructField("n_blocks_dropped", IntegerType(), True),
         StructField("lang", StringType(), True),
         StructField("error", StringType(), True),
+    ]
+)
+
+# Run manifest ≅ the reference's JobStatus map
+# (/root/reference/src/types/return-strategy.types.ts:9-17) at
+# partition-bucket granularity: resumable commit bookkeeping + metrics.
+MANIFEST = StructType(
+    [
+        StructField("bucket", IntegerType(), False),
+        StructField("status", StringType(), False),  # completed | failed
+        StructField("n_turns", LongType(), True),
+        StructField("n_words_kept", LongType(), True),
+        StructField("n_words_dropped", LongType(), True),
+        StructField("n_errors", LongType(), True),
+        StructField("error", StringType(), True),
+        StructField("started_at", TimestampType(), True),
+        StructField("committed_at", TimestampType(), True),
     ]
 )

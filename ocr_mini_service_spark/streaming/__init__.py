@@ -14,13 +14,22 @@ and three result-delivery strategies (SSE / webhook / polling —
   receives ``{batch_id, status, n_turns, n_words_kept, n_words_dropped,
   n_errors}`` (the ``WebhookPayload`` analog,
   return-strategy.types.ts:19-25).  Delivery is at-least-once per batch —
-  the same contract as an HTTP POST retry loop.  A resume does not re-post a
-  batch whose checkpoint commit completed, but a batch is re-written and
-  re-posted if the process dies between its write and that commit.
+  the same contract as an HTTP POST retry loop; the checkpoint guarantees a
+  completed batch is never re-posted on resume.
 - **SSE (S7)**: ``attach_progress_listener`` registers a
   ``StreamingQueryListener`` that appends one JSON progress line per
   micro-batch to a file — the SSE ``{type: 'progress', ...}`` event stream
   analog (docs/api.md:127-144).
+
+- **windowed ingest metrics**: ``run_windowed_metrics`` — event-time
+  tumbling windows + watermark over the arriving transcript stream (the
+  §2.8 late-data story).  The reference itself has none (jobs are
+  independent units), so this is engine surface, not parity: append-mode
+  emits a window exactly once when the watermark passes its end, and a
+  straggler for an already-emitted window is dropped (not merged); the
+  checkpoint carries the watermark across drains, so a resumed run keeps
+  fencing closed windows and continues closing new ones where the last
+  drain stopped (tests/test_streaming_window.py).
 """
 
 from __future__ import annotations
@@ -115,6 +124,212 @@ def run_incremental(
         q.awaitTermination()
         return q
     return writer.trigger(processingTime="10 seconds").start()
+
+
+def run_windowed_metrics(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    window: str = "1 hour",
+    watermark: str = "2 hours",
+):
+    """Watermarked tumbling-window ingest metrics: per (event-time window,
+    role) turn counts + char volume, append-mode — one output row per closed
+    window, immutable once written (the contract a downstream incremental
+    consumer needs).  ``maxFilesPerTrigger=1`` makes each drained file its
+    own micro-batch so the watermark advances within a single
+    ``Trigger.AvailableNow`` drain, exactly as it would across arrivals in a
+    long-running stream."""
+    stream = (
+        spark.readStream.schema(TRANSCRIPTS)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(input_dir)
+    )
+    agg = (
+        stream.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), "role")
+        .agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.sum(F.length("text")).alias("n_chars"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "role",
+            "n_turns",
+            "n_chars",
+        )
+    )
+    q = (
+        agg.writeStream.option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .format("parquet")
+        .option("path", output_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def run_dedup_stream(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    delay: str = "10 minutes",
+):
+    """Streaming ingestion dedup: replayed turn deliveries (the retrying-
+    producer analog of the reference's at-least-once webhook POSTs — the
+    same turn file can arrive twice) are dropped on the (conv_id, turn_idx)
+    key via ``dropDuplicatesWithinWatermark``, so downstream extraction sees
+    each turn once WITHOUT unbounded state: the dedup state for a key
+    expires once the event-time watermark passes ``delay`` beyond it — at
+    10^12-turn scale the state store holds only the watermark horizon, never
+    the corpus (a plain dropDuplicates would pin every key forever).
+    AvailableNow drain + checkpoint: resume keeps the watermark and the
+    in-horizon keys, so a replay straddling two drains is still dropped."""
+    stream = (
+        spark.readStream.schema(TRANSCRIPTS)
+        .option("maxFilesPerTrigger", 16)
+        .parquet(input_dir)
+    )
+    deduped = stream.withWatermark("ts", delay).dropDuplicatesWithinWatermark(
+        ["conv_id", "turn_idx"]
+    )
+    q = (
+        deduped.writeStream.option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .format("parquet")
+        .option("path", output_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+SESSION_OUT = (
+    "conv_id string, session_start timestamp, session_end timestamp, "
+    "n_turns long, n_chars long"
+)
+SESSION_STATE = "start_us long, last_us long, n_turns long, n_chars long"
+
+
+def run_session_stream(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    gap_minutes: int = 30,
+    watermark: str = "1 minute",
+    trigger_files: int = 1,
+):
+    """Custom stateful streaming operator via ``applyInPandasWithState``:
+    gap-based conversation sessionization.  Per conv_id the state holds ONE
+    open session (start, last-activity, counts); a turn arriving more than
+    ``gap_minutes`` after the last closes the session (emitted) and opens a
+    new one; an open session with no further turns is flushed by an
+    EVENT-TIME TIMEOUT when the watermark passes last + gap — so emission
+    is driven by stream progress, never wall-clock, and a drain is
+    reproducible.
+
+    This is the semantics ``session_gap_events`` computes in batch (lag +
+    cumulative gap-flag window); the streaming twin needs custom state
+    because the lag window is unbounded over an infinite stream.  Scale
+    shape: state is O(1) per ACTIVE conversation (four longs — the
+    watermark horizon bounds how long a conversation stays active), turns
+    reach the operator partitioned by conv_id, and late turns beyond the
+    watermark are fenced by Spark before the kernel sees them.  Checkpoint
+    resume carries open sessions across drains (pinned by test)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    gap_us = gap_minutes * 60 * 1_000_000
+
+    def sessionize(key, pdfs, state):
+        import pandas as pd  # executor-side
+
+        conv_id = key[0]
+        cols = ["conv_id", "session_start", "session_end", "n_turns", "n_chars"]
+
+        def closed_row(start_us, last_us, n, c):
+            return {
+                "conv_id": conv_id,
+                "session_start": pd.Timestamp(start_us, unit="us"),
+                "session_end": pd.Timestamp(last_us, unit="us"),
+                "n_turns": n,
+                "n_chars": c,
+            }
+
+        if state.hasTimedOut:
+            start, last, n, c = state.get
+            state.remove()
+            yield pd.DataFrame([closed_row(start, last, n, c)], columns=cols)
+            return
+        start = last = None
+        n = c = 0
+        if state.exists:
+            start, last, n, c = state.get
+        closed = []
+        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            ["ts", "n_chars"], kind="mergesort"
+        )
+        for r in batch.itertuples(index=False):
+            ts_us = int(pd.Timestamp(r.ts).value // 1_000)
+            if last is not None and ts_us - last > gap_us:
+                closed.append(closed_row(start, last, n, c))
+                start, last, n, c = None, None, 0, 0
+            if start is None:
+                start = ts_us
+            # clamp, don't assign: a late-but-within-watermark turn from a
+            # later micro-batch may be out of order ACROSS batches (the
+            # per-batch sort only fixes within-batch order); letting it
+            # regress last-activity would mis-time subsequent gap splits
+            # and emit a session_end earlier than a member turn.  Lateness
+            # is bounded by the watermark delay, so the clamp absorbs it
+            # into the open session — the same session the sorted batch
+            # twin assigns it to when delay <= gap.
+            start = min(start, ts_us)
+            last = max(last, ts_us) if last is not None else ts_us
+            n += 1
+            c += int(r.n_chars)
+        state.update((int(start), int(last), int(n), int(c)))
+        # event-time timeout at last + gap (ms): fires once the watermark
+        # passes it — the no-more-turns flush
+        state.setTimeoutTimestamp(last // 1_000 + gap_us // 1_000)
+        yield pd.DataFrame(closed, columns=cols)
+
+    stream = (
+        spark.readStream.schema(TRANSCRIPTS)
+        # trigger_files=1 gives the finest micro-batch granularity (tests
+        # pin cross-batch state semantics with it); a drain over many
+        # files should batch more coarsely — per-BATCH cost is dominated
+        # by the per-active-key pandas kernel invocation, so batches ∝
+        # files multiplies that by the file count
+        .option("maxFilesPerTrigger", trigger_files)
+        .parquet(input_dir)
+    )
+    turns = stream.select(
+        "conv_id", "ts", F.length("text").cast("long").alias("n_chars")
+    ).withWatermark("ts", watermark)
+    sessions = turns.groupBy("conv_id").applyInPandasWithState(
+        sessionize,
+        SESSION_OUT,
+        SESSION_STATE,
+        "append",
+        GroupStateTimeout.EventTimeTimeout,
+    )
+    q = (
+        sessions.writeStream.option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .format("parquet")
+        .option("path", output_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
 
 
 def attach_progress_listener(spark: SparkSession, progress_path: str):

@@ -9,3 +9,9 @@ def spark():
     yield s
     s.stop()
 
+
+@pytest.fixture(scope="session")
+def sf_dir():
+    import os
+
+    return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

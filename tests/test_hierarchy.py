@@ -145,3 +145,54 @@ def test_hierarchy_links_into_extracted_words(spark):
     }
     assert words <= line_children
 
+
+def test_hierarchy_lines_driver_query_reconstructs_documents(spark, sf_dir):
+    """The flat driver view of the rollup tells the whole story per doc:
+    line contents concatenated in line order equal the document's first 40
+    normalized words, word counts telescope, and ids are unique."""
+    import re
+
+    from ocr_mini_service_spark.operators import transcribe
+
+    df = transcribe.hierarchy_lines(spark, sf_dir).toPandas()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").toPandas()
+    want = docs.set_index("doc_id")["text"].map(
+        lambda s: " ".join(re.sub(r"\s+", " ", s.strip()).split(" ")[:40])
+    )
+    got = (
+        df.sort_values(["doc_id", "line_idx"])
+        .groupby("doc_id")["content"]
+        .apply(" ".join)
+    )
+    assert got.to_dict() == want.reindex(got.index).to_dict()
+    assert df["line_id"].is_unique
+    assert (df.groupby("doc_id")["n_words"].sum() == want.reindex(got.index).str.split().str.len()).all()
+    assert df["n_words"].between(1, 10).all()
+
+
+def test_hierarchy_parents_link_to_lines(spark, sf_dir):
+    """Cross-level consistency of the flat driver views: the paragraph's
+    child count equals the doc's line count, the block parents exactly one
+    paragraph, and parent content equals the line contents joined in line
+    order (bottom-up aggregation all the way to the root)."""
+    from ocr_mini_service_spark.operators import transcribe
+
+    parents = transcribe.hierarchy_parents(spark, sf_dir).toPandas()
+    lines = transcribe.hierarchy_lines(spark, sf_dir).toPandas()
+    per_doc_lines = lines.groupby("doc_id")
+    n_lines = per_doc_lines.size()
+    joined = (
+        lines.sort_values(["doc_id", "line_idx"])
+        .groupby("doc_id")["content"]
+        .apply(lambda s: " ".join(x for x in s if x))
+    )
+    blocks = parents[parents["kind"] == "block"].set_index("doc_id")
+    paras = parents[parents["kind"] == "paragraph"].set_index("doc_id")
+    assert (blocks["n_children"] == 1).all()
+    assert (paras["n_children"] == n_lines.reindex(paras.index)).all()
+    assert blocks["content"].to_dict() == joined.reindex(blocks.index).to_dict()
+    assert paras["content"].to_dict() == joined.reindex(paras.index).to_dict()
+    # geometry: parent height spans all lines
+    assert (blocks["height"] * 1000).round().astype(int).eq(
+        n_lines.reindex(blocks.index) * 100
+    ).all()

@@ -15,7 +15,7 @@ from ocr_mini_service_spark.kernel import (
     validate_language,
 )
 from ocr_mini_service_spark.oracle import golden_extracted
-from ocr_mini_service_spark.pipeline import extract_fused
+from ocr_mini_service_spark.pipeline import extract_fused, extract_relational, finalize
 
 from test_pipeline import assert_matches_golden
 
@@ -80,7 +80,7 @@ def test_kernel_language_isolation():
     assert r["error"] is None
 
 
-@pytest.mark.parametrize("path", [extract_fused])
+@pytest.mark.parametrize("path", [extract_fused, extract_relational])
 def test_spark_paths_respect_lang(spark, path):
     pdf = _transcripts()
     golden = golden_extracted(pdf)
@@ -90,7 +90,7 @@ def test_spark_paths_respect_lang(spark, path):
     assert all(len(w) == 0 for w in bad.words)
     assert all(len(c) == 1 for c in bad.codes)
     df = spark.createDataFrame(pdf)
-    assert_matches_golden(path(df).orderBy("conv_id", "turn_idx"), golden)
+    assert_matches_golden(finalize(path(df)), golden)
 
 
 def test_fused_without_lang_column_defaults(spark):
@@ -98,4 +98,4 @@ def test_fused_without_lang_column_defaults(spark):
     golden = golden_extracted(pdf)
     assert set(golden.lang) == {DEFAULT_LANGUAGE}
     df = spark.createDataFrame(pdf)
-    assert_matches_golden(extract_fused(df).orderBy("conv_id", "turn_idx"), golden)
+    assert_matches_golden(finalize(extract_fused(df)), golden)

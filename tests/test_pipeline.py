@@ -1,5 +1,6 @@
-"""Per-turn equality of the fused Spark path vs the serial oracle (the north
-rule's correctness gate): it must reproduce the golden rows bit-for-bit under
+"""Per-turn equality of both Spark paths vs the serial oracle (the north
+rule's correctness gate): fused mapInPandas pipeline and the relational
+operator decomposition must reproduce the golden rows bit-for-bit under
 stable (conv_id, turn_idx) ordering."""
 
 import math
@@ -8,7 +9,7 @@ import pandas as pd
 import pytest
 
 from ocr_mini_service_spark.oracle import golden_extracted
-from ocr_mini_service_spark.pipeline import extract_fused
+from ocr_mini_service_spark.pipeline import extract_fused, extract_relational, finalize
 from ocr_mini_service_spark.schema import TRANSCRIPTS
 from ocr_mini_service_spark.synth import gen_transcripts
 
@@ -81,7 +82,11 @@ def assert_matches_golden(result_df, golden):
 
 
 def test_fused_matches_oracle(transcripts_df, golden):
-    assert_matches_golden(extract_fused(transcripts_df).orderBy("conv_id", "turn_idx"), golden)
+    assert_matches_golden(finalize(extract_fused(transcripts_df)), golden)
+
+
+def test_relational_matches_oracle(transcripts_df, golden):
+    assert_matches_golden(finalize(extract_relational(transcripts_df)), golden)
 
 
 def test_fused_schema(transcripts_df):

@@ -118,3 +118,28 @@ def test_sigkill_mid_write_then_resume_no_dupes_no_gaps(tmp_path):
     assert n_buckets == 32  # every bucket accounted for, exactly once
     assert man_turns == n_in  # manifest tallies close over the input
 
+
+def test_run_dedup_cli_materializes_labels(tmp_path):
+    """The production dedup CLI: labels written once, survivors derived from
+    the READ-BACK labels table; audit accounting closes (kept + removed =
+    corpus) and the two tables agree with an independent reader."""
+    out = tmp_path / "dedup"
+    proc = subprocess.run(
+        ["python", os.path.join(REPO, "run_dedup.py"),
+         "--sf-dir", "/root/testdata/sf0.001", "--output", str(out),
+         "--algo", "star", "--master", "local[4]"],
+        capture_output=True, text=True, timeout=600, cwd=REPO,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = [l for l in proc.stdout.splitlines() if l.startswith('{"job"')]
+    stats = json.loads(line[-1])
+    assert stats["n_docs"] == stats["n_survivors"] + stats["n_removed"]
+    labels = duckdb.sql(
+        f"SELECT COUNT(*), COUNT(DISTINCT doc_id) FROM '{out}/cluster_labels/*.parquet'"
+    ).fetchone()
+    assert labels[0] == labels[1] == stats["n_docs"]
+    surv = duckdb.sql(
+        f"SELECT COUNT(*), SUM(n_dupes_removed) FROM '{out}/survivors/*.parquet'"
+    ).fetchone()
+    assert surv[0] == stats["n_survivors"]
+    assert (surv[1] or 0) == stats["n_removed"]
