@@ -84,10 +84,15 @@ def env_report(spark: SparkSession) -> dict:
     """Environment/debug introspection — the ``GET /ocr/debug`` analog
     (/root/reference/src/ocr/ocr.service.ts:23-92 reports temp dir, engine
     version, installed languages; here: engine versions, parallelism, the
-    scale-critical confs, and the supported language set)."""
+    scale-critical confs, and the supported language set).  The Python
+    version and whether zip imports invalidate lazily are here because every
+    Python task's fixed cost depends on them."""
+    import platform
+
     import pandas
     import pyarrow
 
+    from . import lazy_zip_invalidation
     from .kernel import SUPPORTED_LANGUAGES
 
     sc = spark.sparkContext
@@ -104,6 +109,8 @@ def env_report(spark: SparkSession) -> dict:
         "master": sc.master,
         "default_parallelism": sc.defaultParallelism,
         "python_worker": "arrow",  # no row-at-a-time UDFs anywhere (SURVEY §2.9)
+        "python_version": platform.python_version(),
+        "lazy_zip_invalidation": lazy_zip_invalidation(),
         "pyarrow_version": pyarrow.__version__,
         "pandas_version": pandas.__version__,
         "conf": {k: spark.conf.get(k, None) for k in conf_keys},

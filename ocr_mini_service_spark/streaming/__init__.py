@@ -14,8 +14,11 @@ and three result-delivery strategies (SSE / webhook / polling —
   receives ``{batch_id, status, n_turns, n_words_kept, n_words_dropped,
   n_errors}`` (the ``WebhookPayload`` analog,
   return-strategy.types.ts:19-25).  Delivery is at-least-once per batch —
-  the same contract as an HTTP POST retry loop; the checkpoint guarantees a
-  completed batch is never re-posted on resume.
+  the same contract as an HTTP POST retry loop.  The checkpoint skips a
+  batch on resume only once its commit is written: a process that dies
+  between a batch's data write and that commit re-runs the batch on
+  resume, appending its rows again and posting its ``batch_id`` a second
+  time.
 - **SSE (S7)**: ``attach_progress_listener`` registers a
   ``StreamingQueryListener`` that appends one JSON progress line per
   micro-batch to a file — the SSE ``{type: 'progress', ...}`` event stream

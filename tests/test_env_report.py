@@ -2,6 +2,8 @@
 (ocr.service.ts:23-92): engine versions, parallelism, the scale confs the
 engine assumes, and the installed-language set."""
 
+import platform
+
 from ocr_mini_service_spark.kernel import DEFAULT_LANGUAGE
 from ocr_mini_service_spark.session import env_report, infer_shuffle_partitions
 
@@ -23,3 +25,5 @@ def test_env_report(spark):
     assert r["conf"]["spark.sql.adaptive.enabled"] == "true"
     assert r["conf"]["spark.sql.execution.arrow.pyspark.enabled"] == "true"
     assert DEFAULT_LANGUAGE in r["languages"]
+    assert r["python_version"] == platform.python_version()
+    assert r["lazy_zip_invalidation"] is True

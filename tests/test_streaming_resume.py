@@ -44,7 +44,8 @@ def test_foreachbatch_external_sink_and_no_duplicate_posts(spark, tmp_path, pdfs
     """S8 webhook analog: the foreachBatch sink posts {batch_id, status,
     metrics} to a pluggable callback after each batch's data write
     (image-recognition.service.ts:445-482).  At-least-once delivery, and a
-    checkpoint resume never re-posts a completed batch."""
+    checkpoint resume re-posts no batch whose checkpoint commit was
+    written."""
     import json
 
     first, second = pdfs
