@@ -1615,7 +1615,7 @@ lines AS (
 SELECT doc_id,
        line_idx,
        substr(sha256(doc_id || '|0|line|0|0|' || line_idx), 1, 16) AS line_id,
-       -- blank words never become children (the rollup's trim != '' word
+       -- blank words never become children (the rollup's str.strip() word
        -- filter, hierarchy.py) — mirror it so a whitespace-only document
        -- yields content '' / n_words 0 on both sides
        array_to_string(list_filter(

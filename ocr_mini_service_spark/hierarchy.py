@@ -7,229 +7,127 @@ elements (block → paragraphs → lines → words), with bboxes normalized by
 the page dims and deterministic sha-256 surrogate ids (§1.4: the
 reference's nanoids are random, so equality compares geometry, ordering
 and linkage, never raw ids).  Word children are the parse-stage words
-(trimmed, non-blank level-5 rows — `parse-tsv-output.function.ts:173`),
-i.e. pre-overlap-pruning, and their ids use the same recipe as the
-extraction kernel, so hierarchy rows cross-link to ``extracted.words``.
+(``str.strip()``-trimmed, non-blank level-5 rows —
+`parse-tsv-output.function.ts:173`), i.e. pre-overlap-pruning, and their
+ids use the same recipe as the extraction kernel, so hierarchy rows
+cross-link to ``extracted.words``.
 
-Spark expression (SURVEY.md §2.4 A4): one shared block-emission Arrow pass,
-page dims distributed by a window max (no join), then one grouped
-``min/max``+ordered-``collect_list`` aggregation per level — all JVM-side,
-shuffling only the skinny exploded rows on the turn key.
+Spark expression (SURVEY.md §2.4 A4): one narrow ``mapInArrow`` pass.  A
+turn's elements depend only on its own TSV, so each turn is parsed with
+``kernel.parse_tsv_blocks`` and rolled up bottom-up inside the pass; no
+shuffle, window or join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
-from .pipeline import _RAW, _emit_blocks
+from . import kernel
 
-_LEVELS = [
-    # (kind, TSV level, grouping keys within a turn, child kind)
-    ("block", 2.0, ["block_num"], "paragraph"),
-    ("paragraph", 3.0, ["block_num", "par_num"], "line"),
-    ("line", 4.0, ["block_num", "par_num", "line_num"], "word"),
-]
+ELEMENT = StructType(
+    [
+        StructField("id", StringType()),
+        StructField("content", StringType()),
+        StructField("left", DoubleType()),
+        StructField("top", DoubleType()),
+        StructField("width", DoubleType()),
+        StructField("height", DoubleType()),
+        StructField("child_ids", ArrayType(StringType())),
+    ]
+)
 
-
-def _det_id(*cols) -> "F.Column":
-    """sha256('|'-joined parts)[:16] — identical to kernel.det_id so ids are
-    reproducible across the Arrow kernel, this rollup, and SQL oracles."""
-    return F.substring(F.sha2(F.concat_ws("|", *cols), 256), 1, 16)
-
-
-def _elements(raw: DataFrame, kind: str, level: float, keys: list[str]) -> DataFrame:
-    """One hierarchy level's own rows: deterministic id + bbox normalized by
-    the page dims (window-distributed from the per-turn meta row)."""
-    w = Window.partitionBy("conv_id", "turn_idx")
-    dims = raw.withColumn(
-        "pw", F.max(F.when(F.col("kind") == "m", F.col("page_w"))).over(w)
-    ).withColumn(
-        "ph", F.max(F.when(F.col("kind") == "m", F.col("page_h"))).over(w)
-    )
-    rows = dims.filter((F.col("kind") == "b") & (F.col("level") == level))
-    key_cols = [F.col(k).cast("int") for k in keys]
-    return rows.select(
-        "conv_id",
-        "turn_idx",
-        *[c.alias(k) for c, k in zip(key_cols, keys)],
-        F.col("line_no").alias("emit_ord"),
-        _det_id(F.col("conv_id"), F.col("turn_idx"), F.lit(kind), *key_cols).alias("id"),
-        (F.col("left_px") / F.col("pw")).alias("left"),
-        (F.col("top_px") / F.col("ph")).alias("top"),
-        (F.col("width_px") / F.col("pw")).alias("width"),
-        (F.col("height_px") / F.col("ph")).alias("height"),
-    )
+# bottom-up, so each level's content feeds its parent: (kind, TSV level,
+# number of key columns — block_num, par_num, line_num)
+_LEVELS = (("line", 4.0, 3), ("paragraph", 3.0, 2), ("block", 2.0, 1))
+_KEYS = ("block_num", "par_num", "line_num", "word_num")
+_COLUMNS = ("blocks", "paragraphs", "lines")
 
 
-def _children(child_rows: DataFrame, parent_keys: list[str]) -> DataFrame:
-    """Ordered child-id lists + aggregated content per parent key (rank = TSV
-    emission order — childIds order is document order in the reference model;
-    ``OCRHierarchyElement extends DimensionData<StructureContent>`` carries
-    the element's text content, .kiro/steering/tech.md:96-98 — content =
-    document-order join of child contents, so line text is the space-joined
-    words of its children, paragraphs join their lines, blocks their
-    paragraphs)."""
-    return (
-        child_rows.groupBy("conv_id", "turn_idx", *parent_keys)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("emit_ord"), F.col("id"), F.col("content")))
-            ).alias("kids")
+def _key(row: dict, n: int) -> tuple[int, ...]:
+    return tuple(int(row[k]) for k in _KEYS[:n])
+
+
+def _rollup(conv_id: str, turn_idx: int, page_w: float, page_h: float,
+            rows: list[dict]) -> dict[str, list[tuple]]:
+    """One turn's elements per kind, each a ``(id, content, left, top, width,
+    height, child_ids)`` tuple in document (TSV emission) order.  An
+    element's content is its children's contents joined by a space; its
+    children are the next level's elements under its key, in emission
+    order."""
+    children: dict[tuple, list[tuple[str, str]]] = {}  # line key -> words
+    at_level: dict[float, list[dict]] = {level: [] for _, level, _ in _LEVELS}
+    for r in rows:
+        if r["level"] == 5.0:
+            text = r["text"].strip()
+            if text:
+                key = _key(r, 4)
+                children.setdefault(key[:3], []).append(
+                    (kernel.det_id(conv_id, turn_idx, *key), text))
+        elif r["level"] in at_level:
+            at_level[r["level"]].append(r)
+    out = {}
+    for kind, level, n_keys in _LEVELS:
+        parents: dict[tuple, list[tuple[str, str]]] = {}
+        elements = []
+        for r in at_level[level]:
+            key = _key(r, n_keys)
+            kids = children.get(key, [])
+            el_id = kernel.det_id(conv_id, turn_idx, kind, *key)
+            content = " ".join(c for _, c in kids)
+            elements.append((
+                el_id, content,
+                kernel.js_div(r["left_px"], page_w), kernel.js_div(r["top_px"], page_h),
+                kernel.js_div(r["width_px"], page_w), kernel.js_div(r["height_px"], page_h),
+                [i for i, _ in kids],
+            ))
+            parents.setdefault(key[:-1], []).append((el_id, content))
+        children = parents
+        out[kind + "s"] = elements
+    return out
+
+
+def _rollup_turn(conv_id: str, turn_idx: int, text: str) -> dict[str, list[tuple]]:
+    """A turn that fails to parse, or has an element whose keys are not
+    integers (``int(nan)``), has no elements: its OCR branch fails, as in
+    extraction (image-recognition.service.ts:165-168), and the job goes on."""
+    try:
+        return _rollup(conv_id, turn_idx, *kernel.parse_tsv_blocks(text))
+    except (ValueError, OverflowError):
+        return {c: [] for c in _COLUMNS}
+
+
+def _hierarchy_batches(batches):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    level_type = to_arrow_type(ArrayType(ELEMENT))
+    for batch in batches:
+        turns = [_rollup_turn(c, t, x) for c, t, x in zip(
+            *(batch.column(n).to_pylist() for n in ("conv_id", "turn_idx", "text")))]
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("conv_id"), batch.column("turn_idx"),
+             *(pa.array([t[c] for t in turns], type=level_type) for c in _COLUMNS)],
+            names=["conv_id", "turn_idx", *_COLUMNS],
         )
-        .select(
-            "conv_id",
-            "turn_idx",
-            *parent_keys,
-            F.transform("kids", lambda s: s["id"]).alias("child_ids"),
-            F.concat_ws(" ", F.transform("kids", lambda s: s["content"])).alias("content"),
-        )
-    )
 
 
-def hierarchy_flat(
-    transcripts: DataFrame,
-    _cache_out: list | None = None,
-    persist: bool | str = True,
-) -> dict[str, DataFrame]:
-    """The rollup's FLAT per-level frames — one row per element with
-    ``conv_id, turn_idx, <keys>, emit_ord, id, content, left, top, width,
-    height, child_ids`` for kinds ``line`` / ``paragraph`` / ``block``.
-
-    This is the cheap surface: consumers that want flat element tables
-    (the driver queries ``hierarchy_lines`` / ``hierarchy_parents``) read
-    these directly instead of paying for the per-turn array assembly +
-    spine joins of ``extract_hierarchy`` and then exploding the arrays
-    right back (measured ~2x of the warm wall-clock at sf0.1).
-
-    The shared block-emission pass feeds FOUR consumers (words + three
-    level subtrees), so without sharing it recomputes 4×.  ``persist``
-    semantics as in ``extract_hierarchy``."""
-    raw = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        _emit_blocks, schema=_RAW
-    )
-    if persist == "checkpoint":
-        raw = raw.localCheckpoint()
-    elif persist:
-        raw = raw.persist()  # at cluster scale use StorageLevel.MEMORY_AND_DISK
-        # or materialize the blocks table instead
-        if _cache_out is not None:
-            _cache_out.append(raw)
-
-    # parse-stage words (level 5, trimmed non-blank) with kernel-compatible
-    # ids; content = the trimmed word text (the leaf of the rollup)
-    words = raw.filter(
-        (F.col("kind") == "b") & (F.col("level") == 5.0) & (F.trim("text") != "")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("block_num").cast("int").alias("block_num"),
-        F.col("par_num").cast("int").alias("par_num"),
-        F.col("line_num").cast("int").alias("line_num"),
-        F.col("line_no").alias("emit_ord"),
-        _det_id(
-            F.col("conv_id"),
-            F.col("turn_idx"),
-            F.col("block_num").cast("int"),
-            F.col("par_num").cast("int"),
-            F.col("line_num").cast("int"),
-            F.col("word_num").cast("int"),
-        ).alias("id"),
-        F.trim("text").alias("content"),
-    )
-
-    # bottom-up so each level's aggregated content feeds its parent:
-    # words → lines → paragraphs → blocks
-    flat: dict[str, DataFrame] = {}
-    enriched_child = words
-    for kind, level, keys, _child in reversed(_LEVELS):
-        elems = _elements(raw, kind, level, keys)
-        kids = _children(enriched_child, keys)
-        enriched = elems.join(kids, ["conv_id", "turn_idx", *keys], "left").select(
-            "conv_id",
-            "turn_idx",
-            *keys,
-            "emit_ord",
-            "id",
-            F.coalesce("content", F.lit("")).alias("content"),
-            "left",
-            "top",
-            "width",
-            "height",
-            F.coalesce("child_ids", F.expr("CAST(array() AS array<string>)")).alias(
-                "child_ids"
-            ),
-        )
-        enriched_child = enriched
-        flat[kind] = enriched
-    return flat
-
-
-def extract_hierarchy(
-    transcripts: DataFrame,
-    _cache_out: list | None = None,
-    persist: bool | str = True,
-) -> DataFrame:
+def extract_hierarchy(transcripts: DataFrame) -> DataFrame:
     """transcripts → one row per turn: blocks / paragraphs / lines arrays of
     ``struct<id, content, left, top, width, height, child_ids>`` in document
     order.  ``content`` is the element's aggregated text (line = space-joined
     child words, paragraph = joined lines, block = joined paragraphs — the
-    ``StructureContent`` payload of ``OCRHierarchyElement``).  Built on
-    ``hierarchy_flat`` (which holds the sharing/persist contract); this
-    wrapper adds the per-turn document-order array assembly + turn spine."""
-    flat = hierarchy_flat(transcripts, _cache_out=_cache_out, persist=persist)
-    per_level: dict[str, DataFrame] = {}
-    for kind, _level, _keys, _child in _LEVELS:
-        per_level[kind] = (
-            flat[kind].select(
-                "conv_id",
-                "turn_idx",
-                "emit_ord",
-                F.struct(
-                    F.col("id"),
-                    F.col("content"),
-                    F.col("left"),
-                    F.col("top"),
-                    F.col("width"),
-                    F.col("height"),
-                    F.col("child_ids"),
-                ).alias("el"),
-            )
-            .groupBy("conv_id", "turn_idx")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col("emit_ord"), F.col("el")))),
-                    lambda s: s["el"],
-                ).alias(f"{kind}s")
-            )
-        )
-
-    spine = transcripts.select("conv_id", "turn_idx")
-    empty = (
-        "CAST(array() AS array<struct<id:string,content:string,left:double,"
-        "top:double,width:double,height:double,child_ids:array<string>>>)"
+    ``StructureContent`` payload of ``OCRHierarchyElement``).  Geometry is
+    normalized with ``kernel.js_div``, so a zero page dimension gives inf/nan
+    as in the extraction kernel."""
+    schema = StructType(
+        [transcripts.schema["conv_id"], transcripts.schema["turn_idx"]]
+        + [StructField(c, ArrayType(ELEMENT), False) for c in _COLUMNS]
     )
-    out = (
-        spine.join(per_level["block"], ["conv_id", "turn_idx"], "left")
-        .join(per_level["paragraph"], ["conv_id", "turn_idx"], "left")
-        .join(per_level["line"], ["conv_id", "turn_idx"], "left")
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.coalesce("blocks", F.expr(empty)).alias("blocks"),
-            F.coalesce("paragraphs", F.expr(empty)).alias("paragraphs"),
-            F.coalesce("lines", F.expr(empty)).alias("lines"),
-        )
+    return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
+        _hierarchy_batches, schema=schema
     )
-    return out
 
 
 def write_hierarchy(transcripts: DataFrame, path: str) -> None:
-    """Materialize the rollup and release the shared block-emission cache
-    (the extract_hierarchy docstring's unpersist contract)."""
-    cache: list = []
-    df = extract_hierarchy(transcripts, _cache_out=cache)
-    df.write.mode("overwrite").parquet(path)
-    for c in cache:
-        c.unpersist()
+    extract_hierarchy(transcripts).write.mode("overwrite").parquet(path)

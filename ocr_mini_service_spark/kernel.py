@@ -4,9 +4,9 @@
 checked against.  The production path (``columnar.extract_batch``) computes
 the same output a whole Arrow batch at a time and calls ``extract_turn`` only
 as its fallback, for turns whose shape it does not model; it also reuses
-``parse_codes``, ``det_id`` and ``validate_language``.  The relational path
-in ``pipeline.py`` calls the parse and reading-order functions from inside
-its operators.
+``parse_codes``, ``det_id`` and ``validate_language``.  The hierarchy rollup
+(``hierarchy.py``) parses each turn with ``parse_tsv_blocks`` and uses
+``det_id`` and ``js_div``.
 
 Every function re-derives (NOT copies) the behavior of the reference
 service at ``/root/reference``:
@@ -153,7 +153,8 @@ def det_id(*parts: Any) -> str:
 
 
 def parse_tsv_blocks(tsv_content: str) -> tuple[float, float, list[dict]]:
-    """Raw-block parse shared by the fused and relational Spark paths.
+    """Raw-block parse: every >=12-column TSV row, levels 1-5.  It serves the
+    hierarchy rollup (``hierarchy.py``) and the hierarchy test oracle.
 
     Mirror of ocr.service.ts:263-293 guards + parse-tsv-output.function.ts
     :134-170 minus normalization/word-filter.  Returns
@@ -208,15 +209,14 @@ def parse_tsv_blocks(tsv_content: str) -> tuple[float, float, list[dict]]:
 
 def parse_tsv_words(tsv_content: str) -> list[dict]:
     """Word-level parse — parse-tsv-output.function.ts:134-196 minus the
-    reading-order sort (applied separately so the relational path can
-    interpose native operators): normalize coords by page dims, conf/100,
-    keep level-5 non-blank rows, compute baseline.
+    reading-order sort (``reading_order``, applied by ``extract_turn``):
+    normalize coords by page dims, conf/100, keep level-5 non-blank rows,
+    compute baseline.
 
     Hot-path variant of ``parse_tsv_blocks`` + filter: numeric fields of
     non-word rows are never observable in the output (the reference parses
     then discards them), so only the level column is parsed before the
-    level-5/non-blank filter.  tests/test_pipeline.py pins equality between
-    this path, the blocks-based relational path, and the oracle."""
+    level-5/non-blank filter."""
     if tsv_content is None or len(tsv_content) == 0:
         return []  # ocr.service.ts:271-274 empty file
     lines = tsv_content.strip().split("\n")

@@ -2,7 +2,7 @@
 
 Runs the pure-Python semantics kernel row-by-row over a transcripts pandas
 DataFrame — no Spark — producing the golden ``extracted`` rows that every
-Spark path (fused mapInPandas, relational operator pipeline, streaming) must
+Spark path (the fused mapInArrow pass, the manifest job, streaming) must
 match per-turn under stable (conv_id, turn_idx) ordering.
 """
 

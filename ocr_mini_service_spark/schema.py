@@ -29,27 +29,6 @@ TRANSCRIPTS = StructType(
     ]
 )
 
-# Exploded per-turn layout elements ≅ TesseractTsvLineData
-# (/root/reference/src/types/parse-tsv-output.function.ts:113-126)
-BLOCKS = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("level", IntegerType(), True),
-        StructField("page_num", IntegerType(), True),
-        StructField("block_num", IntegerType(), True),
-        StructField("par_num", IntegerType(), True),
-        StructField("line_num", IntegerType(), True),
-        StructField("word_num", IntegerType(), True),
-        StructField("left", DoubleType(), True),
-        StructField("top", DoubleType(), True),
-        StructField("width", DoubleType(), True),
-        StructField("height", DoubleType(), True),
-        StructField("conf", DoubleType(), True),
-        StructField("text", StringType(), True),
-    ]
-)
-
 SPAN = StructType(
     [StructField("start", IntegerType(), False), StructField("end", IntegerType(), False)]
 )

@@ -257,7 +257,12 @@ def write_transcripts_dataset(dirpath: str, n_turns: int, seed: int = 42,
     (bench-scale inputs).  Each chunk is seeded by (seed + chunk index) with a
     disjoint conv_id namespace, so the dataset is reproducible regardless of
     worker scheduling; chunk 0 carries the edge-case turns and the
-    pathologically long skew conversation."""
+    pathologically long skew conversation.
+
+    The chunks are generated by a ``spawn`` multiprocessing pool, whose
+    children re-import the calling script.  A script that calls this
+    function needs an ``if __name__ == "__main__":`` guard around the call,
+    or the call never returns."""
     import glob
     import multiprocessing as mp
     import os

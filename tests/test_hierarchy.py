@@ -2,6 +2,9 @@
 kernel.parse_tsv_blocks — pins the documented block→paragraph→line→word
 linkage model (docs/api.md:147-159; OCRHierarchyElement)."""
 
+import math
+
+import pandas as pd
 import pytest
 
 from ocr_mini_service_spark import kernel
@@ -196,3 +199,119 @@ def test_hierarchy_parents_link_to_lines(spark, sf_dir):
     assert (blocks["height"] * 1000).round().astype(int).eq(
         n_lines.reindex(blocks.index) * 100
     ).all()
+
+
+_HEADER = (
+    "level\tpage_num\tblock_num\tpar_num\tline_num\tword_num\t"
+    "left\ttop\twidth\theight\tconf\ttext"
+)
+
+
+def _tsv(page_w: int, page_h: int, *words: str) -> str:
+    """One block > paragraph > line holding ``words`` (word_num 0, 1, ...)."""
+    rows = [_HEADER, f"1\t1\t0\t0\t0\t0\t0\t0\t{page_w}\t{page_h}\t-1\t"]
+    rows += [f"{lvl}\t1\t0\t0\t0\t0\t0\t100\t300\t20\t-1\t" for lvl in (2, 3, 4)]
+    rows += [f"5\t1\t0\t0\t0\t{i}\t{100 * (i + 1)}\t100\t90\t20\t80\t{w}"
+             for i, w in enumerate(words)]
+    return "\n".join(rows)
+
+
+def _one_turn(spark, text: str) -> dict:
+    pdf = pd.DataFrame({"conv_id": ["c"], "turn_idx": [0], "text": [text]})
+    (row,) = extract_hierarchy(spark.createDataFrame(pdf)).collect()
+    return row.asDict(recursive=True)
+
+
+def test_word_text_is_trimmed_like_str_strip(spark):
+    """Parse-stage words are trimmed with ``str.strip()``, as the oracle and
+    the extraction kernel trim them: an ideographic space (U+3000) and a
+    vertical tab are whitespace, and a whitespace-only word is no child."""
+    got = _one_turn(spark, _tsv(1000, 1000, "　a　", "\x0b", "\x0bb"))
+    words = [kernel.det_id("c", 0, 0, 0, 0, n) for n in (0, 2)]
+    line_id = kernel.det_id("c", 0, "line", 0, 0, 0)
+    par_id = kernel.det_id("c", 0, "paragraph", 0, 0)
+    assert [(e["content"], e["child_ids"]) for e in got["lines"]] == [("a b", words)]
+    assert [(e["content"], e["child_ids"]) for e in got["paragraphs"]] == [("a b", [line_id])]
+    assert [(e["content"], e["child_ids"]) for e in got["blocks"]] == [("a b", [par_id])]
+
+
+@pytest.mark.parametrize(
+    "page_w, page_h, want",
+    [
+        # (left, top, width, height) of each element: left_px 0, top_px 100,
+        # width_px 300, height_px 20 over the page dims, as kernel.js_div
+        # divides: x/0 -> inf, 0/0 -> nan
+        (0, 1000, (math.nan, 0.1, math.inf, 0.02)),
+        (1000, 0, (0.0, math.inf, 0.3, math.inf)),
+    ],
+)
+def test_zero_page_dimension_normalizes_like_js_div(spark, page_w, page_h, want):
+    got = _one_turn(spark, _tsv(page_w, page_h, "a"))
+    for col in ("blocks", "paragraphs", "lines"):
+        (el,) = got[col]
+        have = tuple(el[f] for f in ("left", "top", "width", "height"))
+        assert repr(have) == repr(want), col
+        assert el["content"] == "a"
+
+
+def test_non_integer_element_key_empties_only_that_turn(spark):
+    bad = _tsv(1000, 1000, "a").replace("\n4\t1\t0\t0\t0\t", "\n4\t1\t0\t0\tx\t")
+    assert bad != _tsv(1000, 1000, "a")
+    pdf = pd.DataFrame({"conv_id": ["bad", "good"], "turn_idx": [0, 0],
+                        "text": [bad, _tsv(1000, 1000, "a")]})
+    got = {r["conv_id"]: r for r in extract_hierarchy(spark.createDataFrame(pdf)).collect()}
+    assert [len(got["bad"][c]) for c in ("blocks", "paragraphs", "lines")] == [0, 0, 0]
+    assert [len(got["good"][c]) for c in ("blocks", "paragraphs", "lines")] == [1, 1, 1]
+
+
+_ELEMENT_DDL = (
+    "array<struct<id:string,content:string,left:double,top:double,width:double,"
+    "height:double,child_ids:array<string>>>"
+)
+
+
+def test_write_hierarchy_reads_back_with_the_same_schema(spark, tmp_path):
+    """``run_extract --hierarchy`` output: Spark reads back the in-memory
+    schema (made nullable, as Spark writes every file column), the Parquet
+    lists keep their ``element`` names and nullability, and there is one
+    row per input turn."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+    from ocr_mini_service_spark.hierarchy import write_hierarchy
+    from ocr_mini_service_spark.schema import TRANSCRIPTS
+
+    pdf = gen_transcripts(40)
+    sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS)
+    levels = ("blocks", "paragraphs", "lines")
+    readback = _parse_datatype_string(
+        "conv_id string, turn_idx int, " + ", ".join(f"{c} {_ELEMENT_DDL}" for c in levels)
+    )
+    in_memory = StructType(
+        [StructField("conv_id", readback["conv_id"].dataType, False),
+         StructField("turn_idx", readback["turn_idx"].dataType, False)]
+        + [StructField(c, readback[c].dataType, False) for c in levels]
+    )
+    assert extract_hierarchy(sdf).schema == in_memory
+
+    out = str(tmp_path / "hierarchy")
+    write_hierarchy(sdf, out)
+    back = spark.read.parquet(out)
+    assert back.schema == readback
+    assert back.count() == len(pdf)
+    assert back.select("conv_id", "turn_idx").distinct().count() == len(pdf)
+
+    element = pa.struct(
+        [("id", pa.string()), ("content", pa.string())]
+        + [(f, pa.float64()) for f in ("left", "top", "width", "height")]
+        + [("child_ids", pa.list_(pa.field("element", pa.string())))]
+    )
+    want = pa.schema(
+        [pa.field("conv_id", pa.string(), False), pa.field("turn_idx", pa.int32(), False)]
+        + [pa.field(c, pa.list_(pa.field("element", element)), False) for c in levels]
+    )
+    files = list((tmp_path / "hierarchy").glob("*.parquet"))
+    assert files
+    for f in files:
+        assert pq.read_schema(f).remove_metadata().equals(want), f

@@ -15,7 +15,7 @@ from ocr_mini_service_spark.kernel import (
     validate_language,
 )
 from ocr_mini_service_spark.oracle import golden_extracted
-from ocr_mini_service_spark.pipeline import extract_fused, extract_relational, finalize
+from ocr_mini_service_spark.pipeline import extract_fused, finalize
 
 from test_pipeline import assert_matches_golden
 
@@ -80,7 +80,7 @@ def test_kernel_language_isolation():
     assert r["error"] is None
 
 
-@pytest.mark.parametrize("path", [extract_fused, extract_relational])
+@pytest.mark.parametrize("path", [extract_fused])
 def test_spark_paths_respect_lang(spark, path):
     pdf = _transcripts()
     golden = golden_extracted(pdf)

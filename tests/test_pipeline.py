@@ -1,7 +1,6 @@
-"""Per-turn equality of both Spark paths vs the serial oracle (the north
-rule's correctness gate): fused mapInPandas pipeline and the relational
-operator decomposition must reproduce the golden rows bit-for-bit under
-stable (conv_id, turn_idx) ordering."""
+"""Per-turn equality of the Spark path vs the serial oracle (the north
+rule's correctness gate): the fused mapInArrow pipeline must reproduce the
+golden rows bit-for-bit under stable (conv_id, turn_idx) ordering."""
 
 import math
 
@@ -9,7 +8,7 @@ import pandas as pd
 import pytest
 
 from ocr_mini_service_spark.oracle import golden_extracted
-from ocr_mini_service_spark.pipeline import extract_fused, extract_relational, finalize
+from ocr_mini_service_spark.pipeline import extract_fused, finalize
 from ocr_mini_service_spark.schema import TRANSCRIPTS
 from ocr_mini_service_spark.synth import gen_transcripts
 
@@ -83,10 +82,6 @@ def assert_matches_golden(result_df, golden):
 
 def test_fused_matches_oracle(transcripts_df, golden):
     assert_matches_golden(finalize(extract_fused(transcripts_df)), golden)
-
-
-def test_relational_matches_oracle(transcripts_df, golden):
-    assert_matches_golden(finalize(extract_relational(transcripts_df)), golden)
 
 
 def test_fused_schema(transcripts_df):

@@ -6,6 +6,7 @@ import re
 import pytest
 
 import __spark_entry__ as entry
+from ocr_mini_service_spark.hierarchy import extract_hierarchy
 from ocr_mini_service_spark.manifest import bucketed_write_plan
 from ocr_mini_service_spark.pipeline import extract_fused
 from ocr_mini_service_spark.plans import formatted_plan
@@ -20,6 +21,14 @@ def transcripts(spark):
 def test_fused_hot_path_has_no_exchange(spark, transcripts):
     plan = formatted_plan(extract_fused(transcripts))
     assert "Exchange" not in plan, plan
+
+
+def test_hierarchy_has_no_exchange(spark, transcripts):
+    """The rollup is one narrow Arrow pass: each turn's elements depend only
+    on its own TSV, so nothing is shuffled, windowed or joined."""
+    plan = formatted_plan(extract_hierarchy(transcripts))
+    for op in ("Exchange", "Window", "Join"):
+        assert op not in plan, plan
 
 
 def test_batch_job_has_exactly_one_exchange(spark, transcripts):
