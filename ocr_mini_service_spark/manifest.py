@@ -4,8 +4,8 @@ src/ocr/image-recognition.service.ts:25, 61-67, 189-214): one row per
 partition-bucket with status, extraction metrics (blocks kept/dropped, error
 counts — service.ts:184-186) and commit lineage, enabling idempotent resume.
 
-Layout (parquet emulation of an Iceberg snapshot — an Iceberg catalog slots in
-behind the same two functions when its runtime jar is on the cluster):
+Layout (plain parquet; every path resolves through the session's Hadoop conf,
+as Spark's own reader and writer resolve it):
 
     <output>/bucket=<k>/part-*.parquet     data, one file per bucket
     <output>/_manifest/part-*.parquet      append-only manifest rows
@@ -22,12 +22,13 @@ by input bytes (``write_task_count``), so every bucket still lands in exactly
 one task and one file, while small inputs do not pay a Python task per bucket.
 
 Crash atomicity: data files are committed by Spark's parquet commit protocol;
-manifest rows are appended only AFTER the data write returns.  By default the
-per-bucket metrics are accumulator tallies riding that same write action
-(``metrics_source="readback"`` aggregates them from the committed files
-instead), so a manifest row is always backed by committed data.  A crash
-between data and manifest re-runs that bucket; dynamic partition overwrite
-makes the re-run idempotent (no duplicates).
+manifest rows are appended only AFTER the data write returns.  The per-bucket
+metrics are accumulator tallies riding that same write action, so a manifest
+row is always backed by committed data.  Each append is one parquet part
+written through the Hadoop FileSystem of the output (temp name, then rename),
+so the manifest lands beside the data on every filesystem.  A crash between
+data and manifest re-runs that bucket; dynamic partition overwrite makes the
+re-run idempotent (no duplicates).
 """
 
 from __future__ import annotations
@@ -41,12 +42,19 @@ import time
 from collections.abc import Collection
 
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from .pipeline import extract_fused
-from .schema import EXTRACTED, TRANSCRIPTS
-from .sources import DEFAULT_IO, TableIO
+from .schema import TRANSCRIPTS
 
 SALT_FACTOR = 32
 
@@ -67,20 +75,6 @@ SALT_FACTOR = 32
 # workload falls between the floor and the cap.  At cluster scale the count
 # caps at n_buckets, one task per bucket.
 TASK_BYTES = 16 << 20
-
-# extracted table + the hive partition column, for inference-free read-back
-from pyspark.sql.types import (  # noqa: E402
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-_EXTRACTED_BUCKETED = StructType(
-    EXTRACTED.fields + [StructField("bucket", IntegerType(), True)]
-)
 
 _MANIFEST_SCHEMA = StructType(
     [
@@ -110,36 +104,50 @@ def bucket_expr(n_buckets: int, salt_factor: int = SALT_FACTOR):
     return F.pmod(F.xxhash64(F.col("conv_id"), salt), F.lit(n_buckets)).cast("int")
 
 
-def read_manifest(
-    spark: SparkSession, output: str, io: TableIO = DEFAULT_IO
-) -> DataFrame | None:
+def _hadoop_path(spark: SparkSession, location: str):
+    """``location`` qualified, with its Hadoop FileSystem, resolved with the
+    session's Hadoop conf exactly as Spark's reader and writer resolve it (a
+    path without a scheme is relative to ``fs.defaultFS``)."""
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(location)
+    fs = path.getFileSystem(conf)
+    return fs, fs.makeQualified(path)
+
+
+def exists(spark: SparkSession, location: str) -> bool:
+    """At least one visible file under ``location``, checked without running
+    a Spark read."""
+    fs, path = _hadoop_path(spark, location)
+    # Spark's file index skips names starting with "_" or "."
+    return fs.exists(path) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(path)
+    )
+
+
+def read_manifest(spark: SparkSession, output: str) -> DataFrame | None:
     """The manifest rows, or None when no manifest part has been committed.
     Existence is checked on the storage side, not by letting a Spark read
-    fail (a failed read makes Spark's observation listener log an ERROR);
-    a corrupt part still raises."""
+    fail (a failed read logs an ERROR); a corrupt part still raises."""
     path = f"{output}/_manifest"
-    if not io.exists(spark, path):
+    if not exists(spark, path):
         return None
-    return io.read(spark, path)
+    return spark.read.parquet(path)
 
 
-def committed_buckets(
-    spark: SparkSession, output: str, io: TableIO = DEFAULT_IO
-) -> set[int]:
-    m = read_manifest(spark, output, io=io)
+def committed_buckets(spark: SparkSession, output: str) -> set[int]:
+    m = read_manifest(spark, output)
     if m is None:
         return set()
     rows = m.filter(F.col("status") == "completed").select("bucket").distinct().collect()
     return {r["bucket"] for r in rows}
 
 
-def persisted_n_buckets(
-    spark: SparkSession, output: str, io: TableIO = DEFAULT_IO
-) -> int | None:
+def persisted_n_buckets(spark: SparkSession, output: str) -> int | None:
     """The bucket modulus recorded in an existing output's manifest (None if
     no manifest, or one predating the n_buckets column).  A manifest carrying
     MULTIPLE moduli is already incoherent — surface it, don't pick one."""
-    m = read_manifest(spark, output, io=io)
+    m = read_manifest(spark, output)
     if m is None or "n_buckets" not in m.columns:
         return None
     rows = (
@@ -154,49 +162,36 @@ def persisted_n_buckets(
     return vals[0] if vals else None
 
 
-def _append_manifest(
-    spark: SparkSession, output: str, rows, schema, io: TableIO = DEFAULT_IO
-) -> None:
-    """Append the (one-row-per-bucket, already-collected) manifest delta.
+def _append_manifest(spark: SparkSession, output: str, rows: list[dict]) -> None:
+    """Append the (one-row-per-bucket) manifest delta as one parquet part.
 
-    The manifest is driver-sized by construction — one row per bucket — so a
-    local filesystem gets a direct pyarrow append (no Spark job for 64 rows);
-    remote filesystems (s3://, hdfs://) go through a single-partition append
-    via the TableIO seam, which handles the object-store/catalog commit."""
-    path = f"{output}/_manifest"
-    if "://" in output and not output.startswith("file://"):
-        io.append(spark.createDataFrame(rows, schema=schema).coalesce(1), path)
-        return
-    import os
+    The manifest is driver-sized by construction, so the part is encoded on
+    the driver with pyarrow (no Spark job) and written through the Hadoop
+    FileSystem of the qualified path, the one Spark's writer used for the
+    data.  Temp name + rename: a crash mid-write must not leave a corrupt
+    part visible to read_manifest."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_type
 
-    local = path[len("file://"):] if path.startswith("file://") else path
-    os.makedirs(local, exist_ok=True)
     arrow_schema = pa.schema(
-        [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in _MANIFEST_SCHEMA.fields]
     )
-    # Spark's collect() returns naive datetimes in the HOST's local timezone;
-    # the arrow fields are tz-aware (timestamp[us, UTC]) — attach the local
-    # tz explicitly so both write branches persist the same instant on a
-    # non-UTC host.
-    py_rows = []
-    for r in rows:
-        d = r.asDict()
-        for k, v in d.items():
-            if isinstance(v, datetime.datetime) and v.tzinfo is None:
-                d[k] = v.astimezone()
-        py_rows.append(d)
-    table = pa.Table.from_pylist(py_rows, schema=arrow_schema)
-    # temp-name + atomic rename: a crash mid-write must not leave a corrupt
-    # part visible to read_manifest (crash-atomicity per the module docstring)
-    final = f"{local}/part-{uuid.uuid4().hex}.parquet"
-    tmp = f"{local}/.{os.path.basename(final)}.tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=arrow_schema), buf)
+    fs, path = _hadoop_path(spark, f"{output}/_manifest")
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    final = Path(path, f"part-{uuid.uuid4().hex}.parquet")
+    tmp = Path(path, f".{final.getName()}.tmp")
+    out = fs.create(tmp)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"manifest part rename {tmp} -> {final} failed")
 
 
 @contextlib.contextmanager
@@ -206,12 +201,14 @@ def _emit_progress(spark: SparkSession, output: str, interval: float = 0.5):
     /root/reference/docs/api.md:127-144): a driver-side poller samples the
     SparkListener-backed status tracker and appends JSON lines to
     ``_manifest/_progress.jsonl`` (underscore-prefixed → invisible to
-    parquet readers of the manifest).  Local filesystems only — an external
-    monitor on a real cluster reads the Spark UI / event log instead."""
-    if "://" in output and not output.startswith("file://"):
+    parquet readers of the manifest).  Outputs that resolve to the local
+    filesystem only — an external monitor on a real cluster reads the
+    Spark UI / event log instead."""
+    uri = _hadoop_path(spark, output)[1].toUri()
+    if uri.getScheme() != "file":
         yield
         return
-    local = output[len("file://"):] if output.startswith("file://") else output
+    local = uri.getPath()
     import os
 
     os.makedirs(f"{local}/_manifest", exist_ok=True)
@@ -295,7 +292,6 @@ def bucketed_write_plan(
     skipped: Collection[int] = (),
     salt_factor: int = SALT_FACTOR,
     bucket_accum=None,
-    observation=None,
 ) -> DataFrame:
     """The batch job's plan, up to the partitioned write.
 
@@ -304,25 +300,27 @@ def bucketed_write_plan(
     of ``n_tasks`` contiguous ranges, so partitionBy still writes one file
     per bucket; the sort gives the stable turn order within each bucket and
     declares the ordering the partitionBy writer needs, so the writer does
-    not insert its own partition-column sort."""
+    not insert its own partition-column sort.  The extraction sits above
+    the one Exchange, in the write job's result stage (the condition the
+    ``bucket_accum`` tallies rely on, see ``run_with_manifest``)."""
     df = transcripts.withColumn("bucket", bucket_expr(n_buckets, salt_factor))
     if skipped:
         df = df.filter(~F.col("bucket").isin(*[int(b) for b in skipped]))
     extracted = extract_fused(
         df.repartitionByRange(n_tasks, "bucket"), bucket_accum=bucket_accum
     ).withColumn("bucket", bucket_expr(n_buckets, salt_factor))
-    if observation is not None:
-        # task-side observed metrics riding the write action (zero extra
-        # jobs) — the analog of the reference's SSE progress events
-        # (image-recognition.service.ts:310-312; SURVEY.md §2.1 S7 / §2.4 A3)
-        extracted = extracted.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum("n_blocks_kept").alias("n_words_kept"),
-            F.sum("n_blocks_dropped").alias("n_words_dropped"),
-            F.count("error").alias("n_errors"),
-        )
     return extracted.sortWithinPartitions("bucket", "conv_id", "turn_idx")
+
+
+def _write_buckets(df: DataFrame, output: str) -> None:
+    """Write ``df`` partitioned by bucket, replacing only the buckets it
+    holds (dynamic partition overwrite: a re-run bucket is idempotent)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(output)
+    )
 
 
 def run_with_manifest(
@@ -332,30 +330,26 @@ def run_with_manifest(
     n_buckets: int | None = None,
     resume: bool = False,
     salt_factor: int = SALT_FACTOR,
-    io: TableIO = DEFAULT_IO,
-    metrics_source: str = "accumulator",
 ) -> dict:
     """Extract all not-yet-committed buckets in one Spark job; append manifest
     rows per bucket after the data commit.  Returns run stats.
 
-    ``metrics_source`` selects how per-bucket manifest metrics are obtained:
-
-    - ``"accumulator"`` (default, the 100 TB path): tallied task-side inside
-      the extraction kernel and merged on the driver — zero extra Spark jobs,
-      nothing re-read.  Exactly-once: the updates ride the one write action,
-      and Spark applies each successful task's accumulator contribution once
-      (restarted tasks don't double-count within an action).
-    - ``"readback"``: aggregated from the committed files themselves
-      (column-pruned second scan) — lineage-true cross-check; at 100 TB the
-      re-scan is the cost.  tests/test_manifest_metrics.py asserts both
-      derivations agree with the observed metrics and with each other."""
+    The per-bucket manifest metrics are tallied task-side inside the
+    extraction kernel into an accumulator and merged on the driver — zero
+    extra Spark jobs, nothing re-read.  They count each turn exactly once
+    because ``mapInArrow`` runs in the write job's result stage, above the
+    plan's one Exchange (tests/test_plans.py asserts it): Spark merges a
+    result task's accumulator updates once per partition, however often the
+    task is retried.  In a shuffle-map stage a recomputed task would add its
+    tallies again.  tests/test_manifest_metrics.py checks the rows against
+    DuckDB's per-bucket aggregate of the committed files."""
     # An existing output's manifest pins the bucket modulus: ids are only
     # meaningful relative to it.  Resuming (or overwriting into) the same
     # output with a different modulus would silently DROP turns whose new id
     # collides with a committed old id and duplicate others — so an explicit
     # mismatch is an error, and an unspecified n_buckets ADOPTS the persisted
     # value rather than the parallelism default.
-    persisted = persisted_n_buckets(spark, output, io=io)
+    persisted = persisted_n_buckets(spark, output)
     if n_buckets is not None and persisted is not None and persisted != n_buckets:
         raise ValueError(
             f"output {output} was written with n_buckets={persisted}, but "
@@ -373,12 +367,10 @@ def run_with_manifest(
             if persisted is not None
             else 8 * spark.sparkContext.defaultParallelism
         )
-    if metrics_source not in ("accumulator", "readback"):
-        raise ValueError(f"unknown metrics_source: {metrics_source!r}")
 
-    started_at = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    started_at = datetime.datetime.now(datetime.timezone.utc)
 
-    skipped: set[int] = committed_buckets(spark, output, io=io) if resume else set()
+    skipped: set[int] = committed_buckets(spark, output) if resume else set()
     # the planner's size estimate (file bytes for a scan): no Spark job
     input_bytes = transcripts._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     n_tasks = write_task_count(
@@ -389,104 +381,48 @@ def run_with_manifest(
     )
 
     t0 = time.time()
-    accum = (
-        spark.sparkContext.accumulator({}, _BucketMetricsParam())
-        if metrics_source == "accumulator"
-        else None
-    )
-    obs = Observation("extract")
+    accum = spark.sparkContext.accumulator({}, _BucketMetricsParam())
     plan = bucketed_write_plan(
-        transcripts, n_buckets, n_tasks, skipped, salt_factor,
-        bucket_accum=accum, observation=obs,
+        transcripts, n_buckets, n_tasks, skipped, salt_factor, bucket_accum=accum
     )
     with _emit_progress(spark, output):
-        io.write(
-            plan, output, partition_by=("bucket",), mode="overwrite", dynamic=True
-        )
-    observed_metrics = obs.get
+        _write_buckets(plan, output)
     t_write = time.time() - t0
 
-    committed_at = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-    t0 = time.time()
-    if accum is not None:
-        # Task-side tallies, merged driver-side by the accumulator — zero
-        # extra jobs, nothing re-read (the 100 TB path).
-        rows = [
-            Row(
-                bucket=int(b),
-                status="completed",
-                n_turns=int(m[0]),
-                n_words_kept=int(m[1]),
-                n_words_dropped=int(m[2]),
-                n_errors=int(m[3]),
-                error=None,
-                # tz-aware: _append_manifest treats NAIVE stamps as host-local
-                # (the collect() convention); these are UTC instants
-                started_at=started_at.replace(tzinfo=datetime.timezone.utc),
-                committed_at=committed_at.replace(tzinfo=datetime.timezone.utc),
-                n_buckets=int(n_buckets),
-            )
-            for b, m in sorted(accum.value.items())
-        ]
-        manifest_schema = _MANIFEST_SCHEMA
-    else:
-        # Metrics from the committed files (lineage-true), column-pruned scan.
-        back = io.read(spark, output, schema=_EXTRACTED_BUCKETED)
-        if skipped:
-            back = back.filter(~F.col("bucket").isin(*[int(b) for b in skipped]))
-        metrics = (
-            back.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_turns"),
-                F.sum("n_blocks_kept").cast("long").alias("n_words_kept"),
-                F.sum("n_blocks_dropped").cast("long").alias("n_words_dropped"),
-                F.count("error").alias("n_errors"),
-            )
-            .select(
-                "bucket",
-                F.lit("completed").alias("status"),
-                "n_turns",
-                "n_words_kept",
-                "n_words_dropped",
-                "n_errors",
-                F.lit(None).cast("string").alias("error"),
-                F.lit(started_at).alias("started_at"),
-                F.lit(committed_at).alias("committed_at"),
-                F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-            )
+    committed_at = datetime.datetime.now(datetime.timezone.utc)
+    rows = [
+        dict(
+            bucket=b,
+            status="completed",
+            n_turns=n,
+            n_words_kept=kept,
+            n_words_dropped=dropped,
+            n_errors=errors,
+            error=None,
+            started_at=started_at,
+            committed_at=committed_at,
+            n_buckets=n_buckets,
         )
-        # collect the (tiny: one row per bucket) metrics once, then append
-        # them from the driver — one metrics job total, no manifest re-read
-        rows = metrics.collect()
-        manifest_schema = metrics.schema
-    t_metrics = time.time() - t0
+        for b, (n, kept, dropped, errors) in sorted(accum.value.items())
+    ]
     t0 = time.time()
-    _append_manifest(spark, output, rows, manifest_schema, io=io)
+    _append_manifest(spark, output, rows)
     return {
-        "n_turns": int(sum(r["n_turns"] for r in rows)),
-        "buckets_done": len({r["bucket"] for r in rows}),
+        "n_turns": sum(r["n_turns"] for r in rows),
+        "buckets_done": len(rows),
         "buckets_skipped": len(skipped),
         "n_buckets": n_buckets,
         "n_tasks": n_tasks,
         "t_write": t_write,
-        "t_metrics": t_metrics,
         "t_manifest": time.time() - t0,
-        "observed": observed_metrics,
     }
 
 
-def load_transcripts(
-    spark: SparkSession, path: str, io: TableIO = DEFAULT_IO
-) -> DataFrame:
-    return io.read(spark, path, schema=TRANSCRIPTS)
+def load_transcripts(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(TRANSCRIPTS).parquet(path)
 
 
-def compact_output(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    io: TableIO = DEFAULT_IO,
-) -> dict:
+def compact_output(spark: SparkSession, src: str, dst: str) -> dict:
     """Small-file compaction of a committed extraction output — the table
     maintenance a long-lived ingest target needs: every ``--resume`` batch
     and every streaming trigger appends its own part files per bucket, and
@@ -506,17 +442,17 @@ def compact_output(
 
     Returns {"rows", "files_before", "files_after", "buckets"} — counts
     derived distributedly via input_file_name(), FS-agnostic."""
-    df = io.read(spark, src)
-    n_buckets = persisted_n_buckets(spark, src, io=io)
+    df = spark.read.parquet(src)
+    n_buckets = persisted_n_buckets(spark, src)
     files_before = df.select(F.input_file_name()).distinct().count()
     rows_before = df.count()
     # one task per bucket value -> one file per bucket dir
     compacted = df.repartition(int(n_buckets or 256), "bucket")
-    io.write(compacted, dst, partition_by=("bucket",), mode="overwrite", dynamic=True)
-    m = read_manifest(spark, src, io=io)
+    _write_buckets(compacted, dst)
+    m = read_manifest(spark, src)
     if m is not None:
-        io.write(m, f"{dst}/_manifest", mode="overwrite")
-    out = io.read(spark, dst)
+        m.write.mode("overwrite").parquet(f"{dst}/_manifest")
+    out = spark.read.parquet(dst)
     rows_after = out.count()
     if rows_after != rows_before:
         raise RuntimeError(

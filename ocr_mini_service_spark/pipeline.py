@@ -72,8 +72,10 @@ def extract_fused(transcripts: DataFrame, bucket_accum=None) -> DataFrame:
     ``{bucket: (n_turns, n_words_kept, n_words_dropped, n_errors)}`` as it
     extracts — per-bucket manifest metrics with NO second scan of the
     committed output (the 100 TB path; see manifest.run_with_manifest).
-    Updates ride the single write action, so Spark applies each successful
-    task's contribution exactly once (restarted tasks do not double-count)."""
+    The tallies are exactly-once only while this pass runs in the job's
+    result stage, as it does above the manifest job's one Exchange: Spark
+    merges a result task's accumulator updates once per partition, but a
+    recomputed shuffle-map task would add its updates again."""
     cols = ["conv_id", "turn_idx", "text", "tool"]
     if "lang" in transcripts.columns:
         cols.append("lang")

@@ -23,16 +23,6 @@ and three result-delivery strategies (SSE / webhook / polling —
   ``StreamingQueryListener`` that appends one JSON progress line per
   micro-batch to a file — the SSE ``{type: 'progress', ...}`` event stream
   analog (docs/api.md:127-144).
-
-- **windowed ingest metrics**: ``run_windowed_metrics`` — event-time
-  tumbling windows + watermark over the arriving transcript stream (the
-  §2.8 late-data story).  The reference itself has none (jobs are
-  independent units), so this is engine surface, not parity: append-mode
-  emits a window exactly once when the watermark passes its end, and a
-  straggler for an already-emitted window is dropped (not merged); the
-  checkpoint carries the watermark across drains, so a resumed run keeps
-  fencing closed windows and continues closing new ones where the last
-  drain stopped (tests/test_streaming_window.py).
 """
 
 from __future__ import annotations
@@ -127,53 +117,6 @@ def run_incremental(
         q.awaitTermination()
         return q
     return writer.trigger(processingTime="10 seconds").start()
-
-
-def run_windowed_metrics(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Watermarked tumbling-window ingest metrics: per (event-time window,
-    role) turn counts + char volume, append-mode — one output row per closed
-    window, immutable once written (the contract a downstream incremental
-    consumer needs).  ``maxFilesPerTrigger=1`` makes each drained file its
-    own micro-batch so the watermark advances within a single
-    ``Trigger.AvailableNow`` drain, exactly as it would across arrivals in a
-    long-running stream."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "role")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.length("text")).alias("n_chars"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "role",
-            "n_turns",
-            "n_chars",
-        )
-    )
-    q = (
-        agg.writeStream.option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def run_dedup_stream(

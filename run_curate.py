@@ -21,7 +21,7 @@ Stages, all computed as per-doc flags in one DAG and applied at the end:
    never the reverse);
 5. per-source mixture downsampling (``_mixture``).
 
-Writes the curated docs table through the ``TableIO`` seam (UNORDERED —
+Writes the curated docs table as plain parquet (UNORDERED —
 readers sort; a presentation repartition(1) would funnel the corpus
 through one task) and prints ONE JSON stats line with cumulative
 survivor counts per stage.
@@ -50,7 +50,7 @@ def run(spark, sf_dir: str, output: str) -> dict:
         _split_expr,
         gopher_flags,
     )
-    from ocr_mini_service_spark.sources import DEFAULT_IO, load
+    from ocr_mini_service_spark.sources import load
 
     t0 = time.time()
 
@@ -124,7 +124,7 @@ def run(spark, sf_dir: str, output: str) -> dict:
         & (F.col("kept") == 1)
     ).select("doc_id", "text", "lang", "source")
     curated_path = f"{output}/curated"
-    DEFAULT_IO.write(curated, curated_path)
+    curated.write.mode("overwrite").parquet(curated_path)
 
     return {
         "job": "curate",

@@ -6,9 +6,9 @@ pipeline's PRODUCTION shape:
         --sf-dir /path/corpus_dir --output /path/dedup
 
 Stage 1 resolves duplicate clusters over the LSH candidate-pair graph
-(``dedup_clusters``) and MATERIALIZES the labels table once through the
-``TableIO`` seam.  Stage 2+ never re-derive the clustering: survivors (the
-kept corpus + per-survivor removal audit) filter the READ-BACK labels table
+(``dedup_clusters``) and MATERIALIZES the labels table once as parquet.
+Stage 2+ never re-derive the clustering: survivors (the kept corpus +
+per-survivor removal audit) filter the READ-BACK labels table
 (``dedup_survivors(clusters=...)``), and the same persisted frame is what
 any further consumer (membership filters, join-backs) would read.  Contrast
 with the standalone driver queries, which derive everything inline because
@@ -43,7 +43,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from ocr_mini_service_spark.operators.dedup import _clusters_frame
     from ocr_mini_service_spark.session import get_spark
-    from ocr_mini_service_spark.sources import DEFAULT_IO
 
     spark = get_spark(app_name="dedup-corpus", master=args.master)
     t0 = time.time()
@@ -57,22 +56,22 @@ def main(argv: list[str] | None = None) -> int:
     # table through one task is exactly the single-partition bottleneck the
     # clustering docstring warns composed consumers about.  Readers sort.
     labels = _clusters_frame(spark, args.sf_dir, algo=args.algo)
-    DEFAULT_IO.write(labels, labels_path)
+    labels.write.mode("overwrite").parquet(labels_path)
     t_cluster = time.time() - t0
 
     # stage 2: survivors filter the PERSISTED labels — no re-clustering,
     # no shuffle (a doc_id == cluster_id filter over the read-back table)
     t1 = time.time()
-    persisted = DEFAULT_IO.read(spark, labels_path)
+    persisted = spark.read.parquet(labels_path)
     survivors = persisted.filter(F.col("doc_id") == F.col("cluster_id")).select(
         "doc_id",
         (F.col("cluster_size") - 1).cast("long").alias("n_dupes_removed"),
     )
-    DEFAULT_IO.write(survivors, survivors_path)
+    survivors.write.mode("overwrite").parquet(survivors_path)
     t_survive = time.time() - t1
 
     n_docs = persisted.count()
-    n_kept = DEFAULT_IO.read(spark, survivors_path).count()
+    n_kept = spark.read.parquet(survivors_path).count()
     print(json.dumps({
         "job": "dedup",
         "algo": args.algo,

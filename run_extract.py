@@ -34,11 +34,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="generate a deterministic synthetic input of N turns at --input first")
     p.add_argument("--resume", action="store_true",
                    help="skip buckets already committed in the output manifest")
-    p.add_argument("--metrics", choices=("accumulator", "readback"),
-                   default="accumulator",
-                   help="per-bucket manifest metrics source: task-side "
-                        "accumulator (no second scan; default) or lineage-true "
-                        "read-back of the committed files")
     p.add_argument("--hierarchy", action="store_true",
                    help="also write the lines/paragraphs/blocks rollup table "
                         "to <output>_hierarchy (docs/api.md:147-159 model)")
@@ -59,8 +54,7 @@ def main(argv: list[str] | None = None) -> int:
     transcripts = load_transcripts(spark, args.input)
 
     stats = run_with_manifest(
-        spark, transcripts, args.output, n_buckets=args.buckets,
-        resume=args.resume, metrics_source=args.metrics,
+        spark, transcripts, args.output, n_buckets=args.buckets, resume=args.resume
     )
 
     if args.hierarchy:

@@ -20,7 +20,7 @@ Tables written (each its own parquet dir under --output):
 
 All four are bounded-output aggregates (source / score / bucket x tier /
 4 rows), so the job's write side is tiny regardless of corpus size; the
-cost is the audit scans themselves.  Writes through the ``TableIO`` seam
+cost is the audit scans themselves.  Writes plain parquet
 and prints ONE JSON stats line.
 
 Note on the ``ordered()`` presentation wrapper (a ``repartition(1)``):
@@ -45,7 +45,6 @@ def run(spark, sf_dir: str, output: str) -> dict:
     """The job body, on a caller-owned SparkSession (main() wraps it with
     session lifecycle; tests call it directly on the fixture session)."""
     from ocr_mini_service_spark.operators import corpus
-    from ocr_mini_service_spark.sources import DEFAULT_IO
 
     t0 = time.time()
     tables = {
@@ -56,10 +55,10 @@ def run(spark, sf_dir: str, output: str) -> dict:
     }
     counts: dict[str, int] = {}
     for name, fn in tables.items():
-        DEFAULT_IO.write(fn(spark, sf_dir), f"{output}/{name}")
+        fn(spark, sf_dir).write.mode("overwrite").parquet(f"{output}/{name}")
         # count from the committed (bounded-size) table, not a second
         # evaluation of the corpus-scan DAG
-        counts[name] = DEFAULT_IO.read(spark, f"{output}/{name}").count()
+        counts[name] = spark.read.parquet(f"{output}/{name}").count()
     return {
         "job": "report",
         "tables": counts,

@@ -1,11 +1,6 @@
-"""Manifest metrics must agree across all three independent derivations
-(SURVEY.md §2.1 S7/S9):
-
-- task-side observed metrics (``df.observe`` riding the write),
-- task-side per-bucket accumulator tallies (default ``metrics_source`` —
-  zero extra jobs, the 100 TB path),
-- lineage-true aggregation of the committed files (``readback`` mode).
-"""
+"""The manifest rows the job derives from its task-side accumulator equal the
+committed files' contents bucket for bucket, checked by DuckDB without Spark
+(SURVEY.md §2.1 S7/S9)."""
 
 import duckdb
 
@@ -23,31 +18,21 @@ def _manifest_rows(out):
 def test_observed_metrics_match_committed(spark, tmp_path):
     inp = str(tmp_path / "t.parquet")
     write_transcripts_parquet(inp, 800)
+    out = str(tmp_path / "extracted")
+    stats = run_with_manifest(
+        spark, load_transcripts(spark, inp), out, n_buckets=8
+    )
 
-    outs = {}
-    for mode in ("accumulator", "readback"):
-        out = str(tmp_path / f"extracted_{mode}")
-        stats = run_with_manifest(
-            spark, load_transcripts(spark, inp), out, n_buckets=8,
-            metrics_source=mode,
-        )
-        outs[mode] = out
-
-        obs = stats["observed"]
-        assert obs["n_turns"] == stats["n_turns"]
-
-        man = duckdb.sql(
-            f"SELECT SUM(n_turns), SUM(n_words_kept), SUM(n_words_dropped), "
-            f"SUM(n_errors) FROM '{out}/_manifest/*.parquet'"
-        ).fetchone()
-        assert man[0] == obs["n_turns"]
-        assert man[1] == obs["n_words_kept"]
-        assert man[2] == obs["n_words_dropped"]
-        assert man[3] == obs["n_errors"]
-
-    # the per-bucket rows of the two modes are identical — the accumulator
-    # tallies ARE the committed files' contents, bucket for bucket
-    assert _manifest_rows(outs["accumulator"]) == _manifest_rows(outs["readback"])
+    committed = duckdb.sql(
+        f"SELECT bucket, COUNT(*), SUM(n_blocks_kept), SUM(n_blocks_dropped), "
+        f"COUNT(error) FROM read_parquet('{out}/bucket=*/*.parquet', "
+        f"hive_partitioning=1) GROUP BY bucket ORDER BY bucket"
+    ).fetchall()
+    assert [r[0] for r in committed] == list(range(8))
+    n_in = duckdb.sql(f"SELECT COUNT(*) FROM '{inp}'").fetchone()[0]
+    assert sum(r[1] for r in committed) == stats["n_turns"] == n_in
+    assert sum(r[4] for r in committed) > 0  # the synth mix has error turns
+    assert _manifest_rows(out) == committed
 
     # mid-job progress events (SSE analog) rode the write action: at least
     # one sampled progress row plus the terminal complete row, and the
@@ -55,7 +40,7 @@ def test_observed_metrics_match_committed(spark, tmp_path):
     # (the read above succeeded)
     import json
 
-    with open(f"{outs['accumulator']}/_manifest/_progress.jsonl") as f:
+    with open(f"{out}/_manifest/_progress.jsonl") as f:
         events = [json.loads(line) for line in f]
     assert events[-1]["type"] == "complete"
     assert any(e["type"] == "progress" for e in events)
@@ -89,7 +74,6 @@ def test_compact_output_one_file_per_bucket_resume_noop(spark, tmp_path):
     and refuses nothing it shouldn't (row-count guard is exercised by the
     equality assert)."""
     from ocr_mini_service_spark.manifest import persisted_n_buckets
-    from ocr_mini_service_spark.sources import DEFAULT_IO
     from run_compact import run as compact_run
 
     inp = str(tmp_path / "t.parquet")
@@ -100,13 +84,12 @@ def test_compact_output_one_file_per_bucket_resume_noop(spark, tmp_path):
     # fragment the committed output the way resumed batches / streaming
     # triggers do: many part files per bucket dir, manifest carried over
     frag = str(tmp_path / "fragmented")
-    DEFAULT_IO.write(
-        DEFAULT_IO.read(spark, out).repartition(32),
-        frag,
-        partition_by=("bucket",),
-        mode="overwrite",
+    spark.read.parquet(out).repartition(32).write.mode("overwrite").partitionBy(
+        "bucket"
+    ).parquet(frag)
+    spark.read.parquet(f"{out}/_manifest").write.mode("overwrite").parquet(
+        f"{frag}/_manifest"
     )
-    DEFAULT_IO.write(spark.read.parquet(f"{out}/_manifest"), f"{frag}/_manifest")
 
     dst = str(tmp_path / "compacted")
     res = compact_run(spark, frag, dst)

@@ -7,13 +7,14 @@ manifest exists yet."""
 import datetime
 import glob
 import os
+import re
 import subprocess
 import sys
 
 import duckdb
 import pytest
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import Row
+from pyspark.sql.readwriter import DataFrameReader
 
 from ocr_mini_service_spark import manifest
 from ocr_mini_service_spark.manifest import (
@@ -25,7 +26,6 @@ from ocr_mini_service_spark.manifest import (
     run_with_manifest,
     write_task_count,
 )
-from ocr_mini_service_spark.sources import DEFAULT_IO, ParquetIO
 from ocr_mini_service_spark.synth import write_transcripts_parquet
 
 MIB = 1 << 20
@@ -112,13 +112,13 @@ def test_tasks_sized_by_bytes_one_file_per_bucket(spark, tmp_path, inp, monkeypa
 
 def test_missing_manifest_is_none_without_a_spark_read(spark, tmp_path, monkeypatch):
     reads = []
-    real_read = ParquetIO.read
+    real_read = DataFrameReader.parquet
 
-    def spy_read(self, spark, location, schema=None):
-        reads.append(location)
-        return real_read(self, spark, location, schema)
+    def spy_read(self, *paths, **options):
+        reads.append(paths)
+        return real_read(self, *paths, **options)
 
-    monkeypatch.setattr(ParquetIO, "read", spy_read)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_read)
     # a run killed before its first commit leaves only the progress log
     killed = tmp_path / "killed"
     (killed / "_manifest").mkdir(parents=True)
@@ -134,17 +134,17 @@ def test_missing_manifest_is_none_without_a_spark_read(spark, tmp_path, monkeypa
     assert set(st.getJobIdsForGroup()) == before
 
     (killed / "_manifest" / "part-0.parquet").write_bytes(b"")
-    assert DEFAULT_IO.exists(spark, f"file:{killed}/_manifest")
+    assert manifest.exists(spark, f"file:{killed}/_manifest")
 
 
 def _commit_one_manifest_row(spark, out: str) -> None:
     now = datetime.datetime.now(datetime.timezone.utc)
-    row = Row(
+    row = dict(
         bucket=0, status="completed", n_turns=3, n_words_kept=5,
         n_words_dropped=0, n_errors=0, error=None, started_at=now,
         committed_at=now, n_buckets=8,
     )
-    manifest._append_manifest(spark, out, [row], manifest._MANIFEST_SCHEMA)
+    manifest._append_manifest(spark, out, [row])
 
 
 def test_manifest_found_where_spark_resolves_the_path(spark, tmp_path):
@@ -170,6 +170,35 @@ def test_manifest_found_where_spark_resolves_the_path(spark, tmp_path):
     assert committed_buckets(spark, f"file:{tmp_path}/out") == {0}
 
 
+def test_scheme_less_output_resumes_on_the_default_fs(spark, tmp_path, inp):
+    """Under a non-local fs.defaultFS, a path without a scheme puts the data
+    AND the manifest on the default filesystem, so resume finds every
+    committed bucket.  A viewfs mount at <tmp>/mnt over <tmp>/real stands in
+    for a remote default filesystem: nothing may land at the local
+    mount-point path."""
+    mnt, real = tmp_path / "mnt", tmp_path / "real"
+    real.mkdir()
+    conf = {
+        "fs.defaultFS": "viewfs://t/",
+        f"fs.viewfs.mounttable.t.link.{mnt}": f"file://{real}",
+        "fs.viewfs.impl.disable.cache": "true",
+    }
+    transcripts = load_transcripts(spark, f"file://{inp}")
+    out = str(mnt / "out")
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        first = run_with_manifest(spark, transcripts, out, n_buckets=4)
+        again = run_with_manifest(spark, transcripts, out, n_buckets=4, resume=True)
+    finally:
+        for k in conf:
+            spark.conf.unset(k)
+    assert first["buckets_done"] == 4
+    assert (again["buckets_skipped"], again["n_turns"]) == (4, 0)
+    assert not os.path.exists(mnt / "out" / "_manifest")
+    assert len(_manifest_rows(str(real / "out"))) == 4
+
+
 def test_truncated_manifest_part_raises(spark, tmp_path):
     out = str(tmp_path / "out")
     _commit_one_manifest_row(spark, out)
@@ -178,17 +207,20 @@ def test_truncated_manifest_part_raises(spark, tmp_path):
     with open(part, "r+b") as f:
         f.truncate(os.path.getsize(part) // 2)
     # corruption must surface, never read as "no manifest" (which would
-    # silently re-extract every committed bucket)
-    with pytest.raises(Py4JJavaError, match="CANNOT_READ_FILE_FOOTER"):
+    # silently re-extract every committed bucket); the part was written
+    # through Hadoop's checksummed local filesystem, so the read fails on
+    # the part's checksum before it reaches the footer
+    with pytest.raises(
+        Py4JJavaError, match=rf"ChecksumException: Checksum error: file:{re.escape(part)}"
+    ):
         committed_buckets(spark, out)
 
 
 def test_fresh_run_logs_no_error(tmp_path, inp):
-    """Two fresh runs in one session: after the first has used an
-    Observation, Spark's observation listener logged an ERROR (with a stack
-    trace) for every failed read, and read_manifest used to detect a missing
-    manifest by a failed read.  The JVM logs to its own stderr, so the runs
-    happen in a child process."""
+    """Two fresh runs in one session log no ERROR: a missing manifest is
+    detected on the storage side, not by a failed Spark read (which logs
+    one, with a stack trace, once a session has used an Observation).  The
+    JVM logs to its own stderr, so the runs happen in a child process."""
     script = (
         "import sys\n"
         "from ocr_mini_service_spark.session import get_spark\n"

@@ -33,13 +33,18 @@ def test_hierarchy_has_no_exchange(spark, transcripts):
 
 def test_batch_job_has_exactly_one_exchange(spark, transcripts):
     """The production write plan (the one run_with_manifest executes): one
-    Exchange, range partitioning of the bucket id onto n_tasks ranges."""
+    Exchange, range partitioning of the bucket id onto n_tasks ranges.  The
+    extraction sits above it, in the write job's result stage, where Spark
+    merges each partition's accumulator tallies once (the manifest metrics'
+    exactly-once condition)."""
     n_tasks = 3
     plan = formatted_plan(bucketed_write_plan(transcripts, 64, n_tasks))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
     assert re.search(
         rf"rangepartitioning\(bucket#\d+ ASC NULLS FIRST, {n_tasks}\)", plan
     ), plan
+    tree = plan.split("\n\n")[0]
+    assert tree.index("MapInArrow") < tree.index("Exchange"), plan
 
 
 def test_admission_filter_pushes_predicates_and_prunes_columns(spark, sf_dir):
