@@ -18,75 +18,52 @@ from pyspark.sql import DataFrame
 from .schema import EXTRACTED
 
 
-def _arrow_extracted_schema():
+def _arrow_extracted_schema(exact: bool = False):
     """Arrow schema mirroring EXTRACTED, built lazily on the worker (pyspark's
-    type mapper is import-heavy)."""
+    type mapper is import-heavy).  ``exact`` keeps EXTRACTED's top-level
+    nullability (``conv_id`` and ``turn_idx`` required), as in the Parquet
+    files the manifest job writes; otherwise every column is nullable."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType), nullable=True)
+    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType),
+                               nullable=f.nullable or not exact)
                       for f in EXTRACTED.fields])
 
 
-def _fused_arrow_batches(batches, bucket_accum=None):
+def input_columns(transcripts: DataFrame) -> list[str]:
+    """The columns the kernel reads: (conv_id, turn_idx, text, tool) plus
+    the optional per-turn ``lang`` options column (the reference's
+    request-body ``language`` option, controller:101-128) when present.
+    Pruned by hand because Catalyst cannot prune inside an arrow/pandas UDF
+    (SURVEY.md §4.1)."""
+    cols = ["conv_id", "turn_idx", "text", "tool"]
+    if "lang" in transcripts.columns:
+        cols.append("lang")
+    return cols
+
+
+def _fused_arrow_batches(batches):
     """Arrow-native driver: each input RecordBatch goes through the columnar
     kernel (``columnar.extract_batch``) and comes out as one EXTRACTED
-    RecordBatch, without pandas.
-
-    When ``bucket_accum`` is given (and the input batch carries a ``bucket``
-    column), per-bucket extraction metrics are tallied task-side into the
-    accumulator from the output's count and error columns — see
-    ``extract_fused``."""
-    import numpy as np
-    import pyarrow.compute as pc
-
+    RecordBatch, without pandas."""
     from . import columnar
 
     schema = _arrow_extracted_schema()
     for batch in batches:
-        out = columnar.extract_batch(batch, schema)
-        if bucket_accum is not None and "bucket" in batch.schema.names:
-            buckets, which = np.unique(batch.column("bucket").to_numpy(), return_inverse=True)
-            tallies = [np.bincount(which, weights=w, minlength=len(buckets)).astype(np.int64)
-                       for w in (None,
-                                 out.column("n_blocks_kept").to_numpy(),
-                                 out.column("n_blocks_dropped").to_numpy(),
-                                 pc.is_valid(out.column("error")).to_numpy(zero_copy_only=False))]
-            bucket_accum.add({int(b): tuple(int(t[i]) for t in tallies)
-                              for i, b in enumerate(buckets.tolist())})
-        yield out
+        yield columnar.extract_batch(batch, schema)
 
 
-def extract_fused(transcripts: DataFrame, bucket_accum=None) -> DataFrame:
-    """transcripts → extracted, one Arrow-batched pass (mapInArrow).
-
-    Input columns are pruned manually to (conv_id, turn_idx, text, tool)
-    plus the optional per-turn ``lang`` options column (the reference's
-    request-body ``language`` option, controller:101-128) when present,
-    because Catalyst cannot prune inside an arrow/pandas UDF (SURVEY.md §4.1).
-    Row order within each partition is preserved (narrow, order-stable op), so
-    an input-side sort survives to the output files.
-
-    ``bucket_accum`` (optional): a dict-valued Spark accumulator; when given
-    and the input has a ``bucket`` column, each task adds
-    ``{bucket: (n_turns, n_words_kept, n_words_dropped, n_errors)}`` as it
-    extracts — per-bucket manifest metrics with NO second scan of the
-    committed output (the 100 TB path; see manifest.run_with_manifest).
-    The tallies are exactly-once only while this pass runs in the job's
-    result stage, as it does above the manifest job's one Exchange: Spark
-    merges a result task's accumulator updates once per partition, but a
-    recomputed shuffle-map task would add its updates again."""
-    cols = ["conv_id", "turn_idx", "text", "tool"]
-    if "lang" in transcripts.columns:
-        cols.append("lang")
-    if bucket_accum is not None and "bucket" in transcripts.columns:
-        cols.append("bucket")
-    pruned = transcripts.select(*cols)
-
-    def fn(batches):
-        return _fused_arrow_batches(batches, bucket_accum=bucket_accum)
-
-    return pruned.mapInArrow(fn, schema=EXTRACTED)
+def extract_fused(transcripts: DataFrame) -> DataFrame:
+    """transcripts → extracted, one Arrow-batched pass (mapInArrow) over the
+    ``input_columns``.  Row order within each partition is preserved
+    (narrow, order-stable op), so an input-side sort survives to the
+    output.  The manifest job does not go through this DataFrame: its write
+    tasks run the same kernel and write the Parquet files themselves
+    (``manifest.bucketed_write_plan``)."""
+    return transcripts.select(*input_columns(transcripts)).mapInArrow(
+        _fused_arrow_batches, schema=EXTRACTED
+    )
 
 
 def finalize(extracted: DataFrame) -> DataFrame:

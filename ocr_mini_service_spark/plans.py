@@ -47,7 +47,10 @@ def plan_report(spark, sf_dir: str) -> dict[str, tuple[str, str]]:
     transcripts = spark.createDataFrame(pdf)
 
     fused = extract_fused(transcripts)
-    job = bucketed_write_plan(transcripts, 64, spark.sparkContext.defaultParallelism)
+    # only printed, never run, so the staging URI is never opened
+    job = bucketed_write_plan(
+        transcripts, 64, spark.sparkContext.defaultParallelism, "file:/plan/_staging/run"
+    )
 
     return {
         "extract_fused (hot path)": (
@@ -59,9 +62,11 @@ def plan_report(spark, sf_dir: str) -> dict[str, tuple[str, str]]:
         "batch job (bucketed + sorted commit)": (
             "exactly ONE Exchange — the input-side range repartition of the "
             "pmod(xxhash64(conv_id, salt), 64) bucket ids onto contiguous "
-            "per-task ranges (one file per bucket); the fat nested output is "
-            "never shuffled, only sorted within partitions for the stable "
-            "(conv_id, turn_idx) order.",
+            "per-task ranges, then a sort of the thin input within "
+            "partitions for the stable (conv_id, turn_idx) order.  The "
+            "MapInArrow on top extracts and writes one Parquet file per "
+            "bucket itself: the fat nested output never enters the JVM, "
+            "only one small row per bucket file comes back.",
             formatted_plan(job),
         ),
         "admission_filter": (

@@ -17,13 +17,15 @@ from pyspark.sql import SparkSession
 
 
 def infer_shuffle_partitions(master: str, cpus: int) -> int:
-    """Total task slots implied by a master URL: local[N] → N; local[*] →
-    cpu count; local-cluster[workers,cores,mem] → workers*cores; anything
-    else (a real cluster URL) → cpus (overridden per-job via spark-submit)."""
+    """Total task slots implied by a master URL: local[N] and
+    local[N,maxFailures] → N; local[*] → cpu count;
+    local-cluster[workers,cores,mem] → workers*cores; anything else (a real
+    cluster URL) → cpus (overridden per-job via spark-submit)."""
     inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-    if "," in inner:
+    if master.startswith("local-cluster"):
         workers, cores_per, _ = inner.split(",")
         return int(workers) * int(cores_per)
+    inner = inner.split(",")[0]
     if inner in ("*", "") or not inner.isdigit():
         return cpus
     return int(inner)

@@ -12,6 +12,7 @@ def test_infer_shuffle_partitions():
     assert infer_shuffle_partitions("local[8]", 32) == 8
     assert infer_shuffle_partitions("local[*]", 32) == 32
     assert infer_shuffle_partitions("local", 32) == 32
+    assert infer_shuffle_partitions("local[4,2]", 32) == 4  # maxFailures=2
     # the scaling-bench executor emulation: workers x cores-per-worker
     assert infer_shuffle_partitions("local-cluster[4,2,6144]", 32) == 8
     assert infer_shuffle_partitions("local-cluster[1,2,6144]", 32) == 2

@@ -1,6 +1,6 @@
-"""The manifest rows the job derives from its task-side accumulator equal the
-committed files' contents bucket for bucket, checked by DuckDB without Spark
-(SURVEY.md §2.1 S7/S9)."""
+"""The manifest rows the job builds from the per-bucket rows its write tasks
+return equal the committed files' contents bucket for bucket, checked by
+DuckDB without Spark (SURVEY.md §2.1 S7/S9)."""
 
 import duckdb
 

@@ -31,14 +31,16 @@ def test_hierarchy_has_no_exchange(spark, transcripts):
         assert op not in plan, plan
 
 
-def test_batch_job_has_exactly_one_exchange(spark, transcripts):
+def test_batch_job_has_exactly_one_exchange(spark, transcripts, tmp_path):
     """The production write plan (the one run_with_manifest executes): one
     Exchange, range partitioning of the bucket id onto n_tasks ranges.  The
-    extraction sits above it, in the write job's result stage, where Spark
-    merges each partition's accumulator tallies once (the manifest metrics'
-    exactly-once condition)."""
+    extracting and writing tasks sit above it, in the job's result stage,
+    whose collect() returns one successful attempt per partition (each
+    bucket written and counted once; tests/test_manifest_tasks.py retries a
+    task)."""
     n_tasks = 3
-    plan = formatted_plan(bucketed_write_plan(transcripts, 64, n_tasks))
+    staging = f"file:{tmp_path}/_staging/plan"
+    plan = formatted_plan(bucketed_write_plan(transcripts, 64, n_tasks, staging))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
     assert re.search(
         rf"rangepartitioning\(bucket#\d+ ASC NULLS FIRST, {n_tasks}\)", plan

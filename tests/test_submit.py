@@ -7,6 +7,7 @@ cannot fall back to the repo checkout) — and checks the job JSON plus the
 committed output with an independent reader.
 """
 
+import glob
 import json
 import os
 import subprocess
@@ -41,11 +42,13 @@ def test_sigkill_mid_write_then_resume_no_dupes_no_gaps(tmp_path):
     write action is in flight, then a ``--resume`` re-run, must converge to
     the same committed state as a clean run — every input turn exactly once
     (no duplicates, no gaps) and a manifest that accounts for every bucket
-    exactly once.  This closes the crash-atomicity claim end to end: the
-    parquet job-level commit means a killed write exposes no partial
-    buckets, the manifest append is temp+rename atomic, and dynamic
-    partition overwrite makes the re-run idempotent from any crash point
-    (mid-write, between data commit and manifest append, or mid-append)."""
+    exactly once.  This closes the crash-atomicity claim end to end: a
+    killed write leaves only staged files, which no bucket directory or
+    manifest row points at; the manifest append is temp+rename atomic and
+    is the commit point; and resume replaces the directory of every bucket
+    without a manifest row, so the re-run is idempotent from any crash
+    point (mid-write, between data commit and manifest append, or
+    mid-append)."""
     from ocr_mini_service_spark.synth import write_transcripts_parquet
 
     inp = str(tmp_path / "transcripts.parquet")
@@ -67,18 +70,15 @@ def test_sigkill_mid_write_then_resume_no_dupes_no_gaps(tmp_path):
         args, cwd=REPO,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
     )
-    # wait for the write action to begin — gate on the writer's staging
-    # dir appearing inside the output (dynamic partition overwrite stages
-    # under .spark-staging-<jobid>), then SIGKILL the whole JVM
-    # mid-flight — no shutdown hooks, no committer cleanup.  Gating on
-    # the staging dir rather than a fixed post-launch sleep keeps the
-    # kill point deterministic as hardware speeds up.  Any other entry
-    # (``_manifest/`` holds the progress log from before the write, and
-    # before the range-partition sampling job) does not count.
+    # wait for the write tasks to begin — gate on a Parquet file staged by
+    # a write task (<out>/_staging/<run>/<partition>-<attempt>/bucket=<k>/),
+    # then SIGKILL the whole JVM mid-flight — no shutdown hooks, no
+    # cleanup.  Gating on the staged file rather than a fixed post-launch
+    # sleep keeps the kill point deterministic as hardware speeds up.  Any
+    # other entry (``_manifest/`` holds the progress log from before the
+    # write, and before the range-partition sampling job) does not count.
     def _write_started() -> bool:
-        return os.path.isdir(out) and any(
-            n.startswith(".spark-staging-") for n in os.listdir(out)
-        )
+        return bool(glob.glob(f"{out}/_staging/*/*/bucket=*/*.parquet"))
 
     deadline = time.time() + 180
     while time.time() < deadline and not _write_started():
