@@ -33,11 +33,14 @@ manifest rows.
 
 Crash atomicity: the manifest append is the single commit point.  It is one
 parquet part written through the Hadoop FileSystem of the output (temp name,
-then rename), so the manifest lands beside the data on every filesystem.
-A crash before it leaves buckets without a manifest row; resume redoes them
-and replaces their directories, so the re-run adds no duplicates.  Staged
-files of killed runs and failed attempts are never read; ``_staging`` is
-cleared before each job and after its commit.
+then rename), so the manifest lands beside the data on every filesystem, and
+it is read back on the driver the same way, without a Spark job.  A crash
+before it leaves buckets without a completed manifest row; resume redoes
+them and replaces their directories, so the re-run adds no duplicates.  A
+rerun into a committed output marks the rows of the buckets it replaces
+"processing" before it deletes their directories.  Staged files of killed
+runs and failed attempts are never read; ``_staging`` is cleared before each
+job and after its commit.
 """
 
 from __future__ import annotations
@@ -128,7 +131,9 @@ def bucket_expr(n_buckets: int, salt_factor: int = SALT_FACTOR):
 def _hadoop_path(spark: SparkSession, location: str):
     """``location`` qualified, with its Hadoop FileSystem, resolved with the
     session's Hadoop conf exactly as Spark's reader and writer resolve it (a
-    path without a scheme is relative to ``fs.defaultFS``)."""
+    path without a scheme is relative to ``fs.defaultFS``).  Each call
+    copies the session's Hadoop conf (≈7 ms), so a job resolves its output
+    once (``_resolved_output``) and passes the FileSystem down."""
     conf = spark._jsparkSession.sessionState().newHadoopConf()
     path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(location)
     fs = path.getFileSystem(conf)
@@ -140,10 +145,13 @@ def _resolved_output(spark: SparkSession, output: str):
     (viewfs) to the path that stores it, with that path's FileSystem: the
     write tasks write there, and a rename within it never crosses a
     mount."""
-    fs, path = _hadoop_path(spark, output)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(output)
+    fs = path.getFileSystem(conf)
+    path = fs.makeQualified(path)
     fs.mkdirs(path)
     path = fs.resolvePath(path)
-    return path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()), path
+    return path.getFileSystem(conf), path
 
 
 def _visible(fs, path) -> list:
@@ -163,35 +171,40 @@ def exists(spark: SparkSession, location: str) -> bool:
     return bool(_visible(*_hadoop_path(spark, location)))
 
 
-def read_manifest(spark: SparkSession, output: str) -> DataFrame | None:
-    """The manifest rows, or None when no manifest part has been committed.
-    Existence is checked on the storage side, not by letting a Spark read
-    fail (a failed read logs an ERROR); a corrupt part still raises."""
-    path = f"{output}/_manifest"
-    if not exists(spark, path):
-        return None
-    return spark.read.parquet(path)
+def _read_manifest_parts(fs, out) -> tuple[list, list[dict]]:
+    """The visible parts of ``out``'s manifest and the rows they hold.  The
+    manifest is driver-sized by construction, so it is read on the driver
+    with pyarrow through the output's Hadoop FileSystem (no Spark job).  A
+    part that fails its checksum or does not decode raises: corruption
+    must never read as "no manifest", which would re-extract every
+    committed bucket."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    parts = _visible(fs, jvm.org.apache.hadoop.fs.Path(out, "_manifest"))
+    rows: list[dict] = []
+    for part in parts:
+        stream = fs.open(part)
+        try:
+            data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        finally:
+            stream.close()
+        rows += pq.read_table(pa.BufferReader(data)).to_pylist()
+    return parts, rows
 
 
-def committed_buckets(spark: SparkSession, output: str) -> set[int]:
-    m = read_manifest(spark, output)
-    if m is None:
-        return set()
-    rows = m.filter(F.col("status") == "completed").select("bucket").distinct().collect()
-    return {r["bucket"] for r in rows}
+def _committed(rows: list[dict]) -> set[int]:
+    return {r["bucket"] for r in rows if r["status"] == "completed"}
 
 
-def persisted_n_buckets(spark: SparkSession, output: str) -> int | None:
-    """The bucket modulus recorded in an existing output's manifest (None if
-    no manifest, or one predating the n_buckets column).  A manifest carrying
-    MULTIPLE moduli is already incoherent — surface it, don't pick one."""
-    m = read_manifest(spark, output)
-    if m is None or "n_buckets" not in m.columns:
-        return None
-    rows = (
-        m.select("n_buckets").filter(F.col("n_buckets").isNotNull()).distinct().collect()
-    )
-    vals = sorted(r["n_buckets"] for r in rows)
+def _persisted_modulus(rows: list[dict], output: str) -> int | None:
+    """The one bucket modulus the manifest ``rows`` carry (None if there
+    are none, or the manifest predates the n_buckets column).  A manifest
+    carrying MULTIPLE moduli is already incoherent: surface it, don't pick
+    one."""
+    vals = sorted({r["n_buckets"] for r in rows if r.get("n_buckets") is not None})
     if len(vals) > 1:
         raise ValueError(
             f"manifest at {output}/_manifest mixes bucket moduli {vals}; the "
@@ -200,8 +213,31 @@ def persisted_n_buckets(spark: SparkSession, output: str) -> int | None:
     return vals[0] if vals else None
 
 
-def _append_manifest(spark: SparkSession, output: str, rows: list[dict]) -> None:
-    """Commit the (one-row-per-bucket) manifest rows of a run: the manifest's
+def read_manifest(spark: SparkSession, output: str) -> DataFrame | None:
+    """The manifest rows as a DataFrame, or None when no manifest part has
+    been committed.  Existence is checked on the storage side, not by
+    letting a Spark read fail (a failed read logs an ERROR); a corrupt part
+    still raises."""
+    path = f"{output}/_manifest"
+    if not exists(spark, path):
+        return None
+    return spark.read.parquet(path)
+
+
+def committed_buckets(spark: SparkSession, output: str) -> set[int]:
+    """The buckets with a completed manifest row."""
+    return _committed(_read_manifest_parts(*_hadoop_path(spark, output))[1])
+
+
+def persisted_n_buckets(spark: SparkSession, output: str) -> int | None:
+    """The bucket modulus recorded in an existing output's manifest (None if
+    no manifest, or one predating the n_buckets column)."""
+    return _persisted_modulus(_read_manifest_parts(*_hadoop_path(spark, output))[1], output)
+
+
+def _append_manifest(fs, out, rows: list[dict]) -> None:
+    """Commit the (one-row-per-bucket) manifest rows of a run into the
+    manifest of ``out`` (a resolved output path on ``fs``): the manifest's
     single commit point.
 
     The manifest is rewritten as one part that holds ``rows`` plus, for
@@ -212,32 +248,24 @@ def _append_manifest(spark: SparkSession, output: str, rows: list[dict]) -> None
     ``committed_buckets``/``persisted_n_buckets`` read as one and the next
     commit folds away.
 
-    The manifest is driver-sized by construction, so the part is encoded on
-    the driver with pyarrow (no Spark job) and read and written through the
-    Hadoop FileSystem of the qualified path, the one the data's commit
-    used.  Temp name + rename: a crash mid-write must not leave a corrupt
-    part visible to read_manifest."""
+    The part is encoded on the driver with pyarrow (no Spark job) and read
+    and written through the output's Hadoop FileSystem, the one the data's
+    commit used.  Temp name + rename: a crash mid-write must not leave a
+    corrupt part visible to the manifest readers."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark import SparkContext
     from pyspark.sql.pandas.types import to_arrow_type
 
     if not rows:
         return
-    fs, path = _hadoop_path(spark, f"{output}/_manifest")
-    jvm = spark.sparkContext._jvm
-    older = _visible(fs, path)
+    older, old_rows = _read_manifest_parts(fs, out)
     latest: dict = {}
     new = {r["bucket"] for r in rows}
-    for part in older:
-        stream = fs.open(part)
-        try:
-            data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        finally:
-            stream.close()
-        for r in pq.read_table(pa.BufferReader(data)).to_pylist():
-            b = r["bucket"]
-            if b not in new and (b not in latest or r["committed_at"] > latest[b]["committed_at"]):
-                latest[b] = r
+    for r in old_rows:
+        b = r["bucket"]
+        if b not in new and (b not in latest or r["committed_at"] > latest[b]["committed_at"]):
+            latest[b] = r
 
     arrow_schema = pa.schema(
         [pa.field(f.name, to_arrow_type(f.dataType)) for f in _MANIFEST_SCHEMA.fields]
@@ -245,35 +273,42 @@ def _append_manifest(spark: SparkSession, output: str, rows: list[dict]) -> None
     kept = sorted(latest.values(), key=lambda r: r["bucket"])
     buf = pa.BufferOutputStream()
     pq.write_table(pa.Table.from_pylist(kept + rows, schema=arrow_schema), buf)
-    Path = jvm.org.apache.hadoop.fs.Path
-    final = Path(path, f"part-{uuid.uuid4().hex}.parquet")
-    tmp = Path(path, f".{final.getName()}.tmp")
-    out = fs.create(tmp)
-    try:
-        out.write(buf.getvalue().to_pybytes())
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
-        raise OSError(f"manifest part rename {tmp} -> {final} failed")
+    Path = SparkContext._jvm.org.apache.hadoop.fs.Path
+    _write_file(fs, Path(Path(out, "_manifest"), f"part-{uuid.uuid4().hex}.parquet"),
+                buf.getvalue().to_pybytes())
     for part in older:
         fs.delete(part, False)
 
 
+def _write_file(fs, path, data: bytes) -> None:
+    """``data`` at ``path`` through ``fs``, written under a hidden temp name
+    and renamed: a crash mid-write leaves no partial file under ``path``."""
+    from pyspark import SparkContext
+
+    tmp = SparkContext._jvm.org.apache.hadoop.fs.Path(path.getParent(), f".{path.getName()}.tmp")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(data)
+    finally:
+        stream.close()
+    if not fs.rename(tmp, path):
+        raise OSError(f"rename {tmp} -> {path} failed")
+
+
 @contextlib.contextmanager
-def _emit_progress(spark: SparkSession, output: str, interval: float = 0.5):
+def _emit_progress(spark: SparkSession, local: str | None, interval: float = 0.5):
     """Mid-job progress events riding the write action (the SSE
     ``{type: 'progress', progress, message}`` stream analog,
     /root/reference/docs/api.md:127-144): a driver-side poller samples the
     SparkListener-backed status tracker and appends JSON lines to
-    ``_manifest/_progress.jsonl`` (underscore-prefixed → invisible to
-    parquet readers of the manifest).  Outputs that resolve to the local
-    filesystem only — an external monitor on a real cluster reads the
-    Spark UI / event log instead."""
-    uri = _hadoop_path(spark, output)[1].toUri()
-    if uri.getScheme() != "file":
+    ``<local>/_manifest/_progress.jsonl`` (underscore-prefixed → invisible
+    to parquet readers of the manifest).  ``local`` is the output's
+    directory on the local filesystem; for an output elsewhere it is None
+    and nothing is written — an external monitor on a real cluster reads
+    the Spark UI / event log instead."""
+    if local is None:
         yield
         return
-    local = uri.getPath()
     import os
 
     os.makedirs(f"{local}/_manifest", exist_ok=True)
@@ -345,7 +380,9 @@ def _stage_bucket_files(batches, staging: str):
     stream every bucket's rows into one Parquet file under this attempt's
     own directory, ``<staging>/<partition>-<attempt>/bucket=<k>/``.  The
     batches arrive sorted by bucket, so a bucket is one run of rows and
-    one open writer.  Yields one ``_STAGED`` row per file written."""
+    one open writer; a constant ``bucket`` column (the streaming drain's)
+    gives one file per task.  Yields one ``_STAGED`` row per file
+    written."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -477,15 +514,22 @@ def run_with_manifest(
     (tests/test_manifest_tasks.py retries a task under ``local[4,2]``).
     The driver then renames each staged bucket directory over
     ``bucket=<k>/`` through the output's Hadoop FileSystem and appends the
-    manifest rows: that append is the commit point.  tests/test_manifest_metrics.py checks the rows
-    against DuckDB's per-bucket aggregate of the committed files."""
+    manifest rows: that append is the commit point.  A replaced bucket's
+    old row is turned to "processing" before its directory is deleted, so
+    no crash leaves a bucket the manifest calls committed without its
+    data.  tests/test_manifest_metrics.py checks the rows against DuckDB's
+    per-bucket aggregate of the committed files."""
+    # One Hadoop resolution of the output for the whole call: the manifest
+    # reads, the write tasks' staging URI, the data commit and the append.
+    fs, out = _resolved_output(spark, output)
+    _, old_rows = _read_manifest_parts(fs, out)
     # An existing output's manifest pins the bucket modulus: ids are only
     # meaningful relative to it.  Resuming (or overwriting into) the same
     # output with a different modulus would silently DROP turns whose new id
     # collides with a committed old id and duplicate others — so an explicit
     # mismatch is an error, and an unspecified n_buckets ADOPTS the persisted
     # value rather than the parallelism default.
-    persisted = persisted_n_buckets(spark, output)
+    persisted = _persisted_modulus(old_rows, output)
     if n_buckets is not None and persisted is not None and persisted != n_buckets:
         raise ValueError(
             f"output {output} was written with n_buckets={persisted}, but "
@@ -506,7 +550,7 @@ def run_with_manifest(
 
     started_at = datetime.datetime.now(datetime.timezone.utc)
 
-    skipped: set[int] = committed_buckets(spark, output) if resume else set()
+    skipped: set[int] = _committed(old_rows) if resume else set()
     # the planner's size estimate (file bytes for a scan): no Spark job
     input_bytes = transcripts._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     n_tasks = write_task_count(
@@ -517,7 +561,6 @@ def run_with_manifest(
     )
 
     t0 = time.time()
-    fs, out = _resolved_output(spark, output)
     Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     staging_root = Path(out, "_staging")
     fs.delete(staging_root, True)  # a killed run's attempts
@@ -525,8 +568,24 @@ def run_with_manifest(
     plan = bucketed_write_plan(
         transcripts, n_buckets, n_tasks, _task_uri(staging), skipped, salt_factor
     )
-    with _emit_progress(spark, output):
+    uri = out.toUri()
+    with _emit_progress(spark, uri.getPath() if uri.getScheme() == "file" else None):
         staged = sorted((r.asDict() for r in plan.collect()), key=lambda r: r["bucket"])
+        # A bucket about to be replaced that still has a manifest row (a
+        # rerun without resume) loses it first: the commit deletes
+        # ``bucket=<k>/`` and then renames the new one in, and a crash
+        # between the two must leave a bucket that resume redoes, not one
+        # the manifest calls committed.  Its row becomes "processing",
+        # which keeps the modulus pinned.  A fresh run has no rows and
+        # pays nothing.
+        replaced = sorted({r["bucket"] for r in old_rows} & {r["bucket"] for r in staged})
+        if replaced:
+            _append_manifest(fs, out, [
+                dict(bucket=b, status="processing", n_turns=0, n_words_kept=None,
+                     n_words_dropped=None, n_errors=0, error=None, started_at=started_at,
+                     committed_at=started_at, n_buckets=n_buckets)
+                for b in replaced
+            ])
         # the data commit: each staged bucket directory, which holds just
         # the bucket's file, replaces the committed one (a directory rename,
         # not mkdirs + file rename: a Hadoop mkdirs costs ≈4.5 ms locally)
@@ -555,7 +614,7 @@ def run_with_manifest(
         for r in staged
     ]
     t0 = time.time()
-    _append_manifest(spark, output, rows)
+    _append_manifest(fs, out, rows)
     fs.delete(staging_root, True)
     return {
         "n_turns": sum(r["n_turns"] for r in rows),

@@ -10,15 +10,19 @@ and three result-delivery strategies (SSE / webhook / polling —
   stops (resumable drain ≅ the job lifecycle; checkpointLocation ≅ the
   job-status map).
 - **webhook (S8)**: ``on_batch`` plugs an external per-batch callback into a
-  ``foreachBatch`` sink — after each micro-batch's data write, the callback
-  receives ``{batch_id, status, n_turns, n_words_kept, n_words_dropped,
-  n_errors}`` (the ``WebhookPayload`` analog,
-  return-strategy.types.ts:19-25).  Delivery is at-least-once per batch —
-  the same contract as an HTTP POST retry loop.  The checkpoint skips a
-  batch on resume only once its commit is written: a process that dies
-  between a batch's data write and that commit re-runs the batch on
-  resume, appending its rows again and posting its ``batch_id`` a second
-  time.
+  ``foreachBatch`` sink that writes and commits each micro-batch the way the
+  manifest job commits its buckets: one Spark job whose Python tasks
+  extract the raw rows and write their own Parquet files, then a commit on
+  the driver.  The callback receives ``{batch_id, status, n_turns,
+  n_words_kept, n_words_dropped, n_errors, timestamp}`` (the
+  ``WebhookPayload`` analog, return-strategy.types.ts:19-25) once the
+  batch's files are committed.  A ``_batches/<batch_id>`` marker, written
+  after the files and before the post, is the batch's commit point: a
+  replay of a batch whose marker exists (a crash before the checkpoint
+  commit) writes and posts nothing, and a replay without one replaces the
+  batch's files.  So no batch's rows land twice and no ``batch_id`` is
+  posted twice as completed; the one window left is a crash after the
+  marker and before the post, which loses that post.
 - **SSE (S7)**: ``attach_progress_listener`` registers a
   ``StreamingQueryListener`` that appends one JSON progress line per
   micro-batch to a file — the SSE ``{type: 'progress', ...}`` event stream
@@ -27,14 +31,23 @@ and three result-delivery strategies (SSE / webhook / polling —
 
 from __future__ import annotations
 
+import functools
 import json
 import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import extract_fused
+from ..manifest import (
+    _STAGED,
+    _resolved_output,
+    _stage_bucket_files,
+    _task_uri,
+    _write_file,
+)
+from ..pipeline import extract_fused, input_columns
 from ..schema import TRANSCRIPTS
 
 
@@ -50,49 +63,61 @@ def run_incremental(
     Returns the StreamingQuery (already awaited when available_now).
 
     Without ``on_batch``, the exactly-once parquet file sink is used.  With
-    it, a ``foreachBatch`` sink writes each micro-batch then invokes the
-    callback with the batch's status + metrics (S8 webhook analog; the write
-    itself is append-mode, so the end-to-end guarantee is the documented
-    at-least-once of foreachBatch)."""
+    it, each micro-batch is one Spark job: its tasks extract the batch's
+    raw rows and write one Parquet file each under
+    ``<output>/_staging/<batch_id>-<uuid>/`` (the manifest job's task
+    writer, ``manifest._stage_bucket_files``, with a constant key), and
+    return only their files' paths and counts.  The driver then commits
+    the batch through the output's Hadoop FileSystem:
+
+    1. it renames the staged files to ``<output>/batch-<batch_id>-<i>.parquet``
+       (a replay first deletes the batch's earlier files, whatever their
+       number);
+    2. it writes the ``<output>/_batches/<batch_id>`` marker, which holds
+       the payload: the batch's commit point;
+    3. it posts the payload, summed from the tasks' counts.
+
+    A batch whose marker exists is a replay of a committed batch (a crash
+    came before the checkpoint commit) and does nothing.  A failure before
+    the marker posts ``status="failed"`` and fails the query; an
+    ``on_batch`` that raises on the completed payload fails the query
+    without a second post.  A crash after the marker and before the post
+    loses that post and never doubles it."""
     stream = (
         spark.readStream.schema(TRANSCRIPTS)
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
 
-    extracted = extract_fused(stream)
     if on_batch is None:
         writer = (
-            extracted.writeStream.option("checkpointLocation", checkpoint_dir)
+            extract_fused(stream).writeStream.option("checkpointLocation", checkpoint_dir)
             .outputMode("append")
             .format("parquet")
             .option("path", output_dir)
         )
     else:
+        fs, out = _resolved_output(spark, output_dir)
+        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        staging_root = Path(out, "_staging")
+        fs.delete(staging_root, True)  # a killed drain's attempts
+        staging_uri = _task_uri(staging_root)
+        batches = Path(out, "_batches")
 
         def _sink(bdf, batch_id: int) -> None:
-            # one pass for the write, one driver-sized agg for the payload
-            # metrics (mirrors the batch manifest row / webhook body)
-            bdf.persist()
+            marker = Path(batches, str(batch_id))
+            if fs.exists(marker):
+                return  # committed and posted before the checkpoint commit
             try:
-                bdf.write.mode("append").parquet(output_dir)
-                m = bdf.agg(
-                    F.count(F.lit(1)).alias("n_turns"),
-                    F.sum("n_blocks_kept").alias("n_words_kept"),
-                    F.sum("n_blocks_dropped").alias("n_words_dropped"),
-                    F.count("error").alias("n_errors"),
-                ).collect()[0]
-                on_batch(
-                    {
-                        "batch_id": int(batch_id),
-                        "status": "completed",
-                        "n_turns": int(m["n_turns"]),
-                        "n_words_kept": int(m["n_words_kept"] or 0),
-                        "n_words_dropped": int(m["n_words_dropped"] or 0),
-                        "n_errors": int(m["n_errors"]),
-                        "timestamp": time.time(),  # WebhookPayload.timestamp
-                    }
-                )
+                name = f"{batch_id}-{uuid.uuid4().hex}"
+                staged = bdf.select(
+                    *input_columns(bdf), F.lit(0).alias("bucket")
+                ).mapInArrow(
+                    functools.partial(_stage_bucket_files, staging=f"{staging_uri}/{name}"),
+                    _STAGED,
+                ).collect()
+                payload = _commit_batch(fs, out, Path(staging_root, name), marker,
+                                        int(batch_id), staged)
             except Exception as e:  # failure path ≅ webhook status='failed'
                 on_batch(
                     {
@@ -103,11 +128,10 @@ def run_incremental(
                     }
                 )
                 raise
-            finally:
-                bdf.unpersist()
+            on_batch(payload)
 
         writer = (
-            extracted.writeStream.option("checkpointLocation", checkpoint_dir)
+            stream.writeStream.option("checkpointLocation", checkpoint_dir)
             .outputMode("append")
             .foreachBatch(_sink)
         )
@@ -117,6 +141,41 @@ def run_incremental(
         q.awaitTermination()
         return q
     return writer.trigger(processingTime="10 seconds").start()
+
+
+def _commit_batch(fs, out, staging, marker, batch_id: int, staged: list) -> dict:
+    """Commit one micro-batch's staged files into ``out`` and write its
+    marker; returns the batch's webhook payload.  The files get names keyed
+    by the batch, and a replay (no marker yet) first deletes the files an
+    earlier attempt of the batch committed, so its rows land once whatever
+    the earlier attempt's file count."""
+    from pyspark import SparkContext
+
+    Path = SparkContext._jvm.org.apache.hadoop.fs.Path
+    # not Spark's ``part-<partition>-<job>`` names: a replay's delete must
+    # not match files an earlier sink wrote into the same output
+    prefix = f"batch-{batch_id:05d}-"
+    for st in fs.globStatus(Path(out, f"{prefix}*.parquet")) or []:
+        fs.delete(st.getPath(), False)
+    for i, r in enumerate(staged):
+        src, dst = Path(staging, r["path"]), Path(out, f"{prefix}{i:05d}.parquet")
+        if not fs.rename(src, dst):
+            raise OSError(f"batch file rename {src} -> {dst} failed")
+    # the batch's emptied task directories and failed attempts' files (a
+    # query runs its batches one at a time, so nothing else is staged);
+    # before the marker, so that nothing after it can fail the batch
+    fs.delete(staging.getParent(), True)
+    payload = {
+        "batch_id": batch_id,
+        "status": "completed",
+        "n_turns": sum(r["n_turns"] for r in staged),
+        "n_words_kept": sum(r["n_words_kept"] for r in staged),
+        "n_words_dropped": sum(r["n_words_dropped"] for r in staged),
+        "n_errors": sum(r["n_errors"] for r in staged),
+        "timestamp": time.time(),  # WebhookPayload.timestamp
+    }
+    _write_file(fs, marker, json.dumps(payload).encode())  # the batch's commit point
+    return payload
 
 
 def run_dedup_stream(

@@ -25,7 +25,9 @@ from pyspark.sql.readwriter import DataFrameReader
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from ocr_mini_service_spark import manifest
+from ocr_mini_service_spark.pipeline import _arrow_extracted_schema
 from ocr_mini_service_spark.schema import EXTRACTED
+from ocr_mini_service_spark.streaming import run_incremental
 from ocr_mini_service_spark.manifest import (
     bucket_expr,
     committed_buckets,
@@ -153,7 +155,7 @@ def _commit_one_manifest_row(spark, out: str) -> None:
         n_words_dropped=0, n_errors=0, error=None, started_at=now,
         committed_at=now, n_buckets=8,
     )
-    manifest._append_manifest(spark, out, [row])
+    manifest._append_manifest(*manifest._resolved_output(spark, out), [row])
 
 
 def test_manifest_found_where_spark_resolves_the_path(spark, tmp_path):
@@ -286,16 +288,17 @@ def test_manifest_commit_folds_leftover_parts(spark, tmp_path):
         status="completed", n_words_kept=5, n_words_dropped=0, n_errors=0,
         error=None, started_at=now, committed_at=now, n_buckets=8,
     )
-    manifest._append_manifest(spark, out, [dict(row, bucket=0, n_turns=3),
-                                           dict(row, bucket=1, n_turns=4)])
+    target = manifest._resolved_output(spark, out)
+    manifest._append_manifest(*target, [dict(row, bucket=0, n_turns=3),
+                                        dict(row, bucket=1, n_turns=4)])
     (first,) = glob.glob(f"{out}/_manifest/part-*.parquet")
     leftover = f"{out}/_manifest/part-leftover.parquet"
     shutil.copy(first, leftover)
     later = now + datetime.timedelta(seconds=1)
-    manifest._append_manifest(spark, out, [dict(row, bucket=1, n_turns=6, committed_at=later)])
+    manifest._append_manifest(*target, [dict(row, bucket=1, n_turns=6, committed_at=later)])
     assert len(glob.glob(f"{out}/_manifest/part-*.parquet")) == 1
     shutil.copy(glob.glob(f"{out}/_manifest/part-*.parquet")[0], leftover)
-    manifest._append_manifest(spark, out, [dict(row, bucket=2, n_turns=7)])
+    manifest._append_manifest(*target, [dict(row, bucket=2, n_turns=7)])
     assert [r[:3] for r in _manifest_rows(out)] == [
         (0, "completed", 3), (1, "completed", 6), (2, "completed", 7)
     ]
@@ -413,7 +416,103 @@ def _nullable(t):
     return t
 
 
+def test_drain_files_keep_the_manifest_jobs_schema(spark, tmp_path, inp):
+    """The webhook drain's files come from the same task writer, so they
+    carry the same file schema; Spark reads the drain's output back as
+    EXTRACTED with every field nullable, as it read the files its own
+    writer made before."""
+    out = str(tmp_path / "out")
+    run_incremental(spark, os.path.dirname(inp), out, str(tmp_path / "ckpt"),
+                    on_batch=lambda payload: None)
+    files = glob.glob(f"{out}/batch-*.parquet")
+    assert files
+    for f in files:
+        assert pq.read_schema(f).equals(_arrow_extracted_schema(exact=True),
+                                        check_metadata=False), f
+    assert spark.read.parquet(out).schema == StructType(
+        [StructField(f.name, _nullable(f.dataType), True) for f in EXTRACTED.fields]
+    )
+
+
 def test_scheme_pyarrow_cannot_open_fails_before_the_job(spark):
     path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path("s3a://b/out/_staging/r")
     with pytest.raises(ValueError, match="pyarrow.fs, which cannot open s3a://b/out"):
         manifest._task_uri(path)
+
+
+class _CrashOnBucketRename:
+    """The output's Hadoop FileSystem, except that the first rename onto a
+    ``bucket=<k>/`` directory raises: the crash between the data commit's
+    delete of the old directory and the rename of the new one."""
+
+    def __init__(self, fs):
+        self._fs = fs
+        self.crashed = False
+
+    def rename(self, src, dst):
+        if not self.crashed and dst.getName().startswith("bucket="):
+            self.crashed = True
+            raise RuntimeError("crash between the bucket delete and its rename")
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_crash_between_bucket_delete_and_rename_then_resume(spark, tmp_path, inp, monkeypatch):
+    """A rerun without resume into a committed output crashes after it
+    deleted ``bucket=0/`` and before it renamed the new directory in.  The
+    bucket's manifest row no longer says completed (the modulus stays
+    pinned), so resume redoes it: every key once, one row per bucket."""
+    out = str(tmp_path / "out")
+    run_with_manifest(spark, load_transcripts(spark, inp), out, n_buckets=4)
+    real = manifest._resolved_output
+
+    def crashing_output(*args):
+        fs, path = real(*args)
+        return _CrashOnBucketRename(fs), path
+
+    monkeypatch.setattr(manifest, "_resolved_output", crashing_output)
+    with pytest.raises(RuntimeError, match="crash between the bucket delete"):
+        run_with_manifest(spark, load_transcripts(spark, inp), out, n_buckets=4)
+    monkeypatch.undo()
+    assert not os.path.exists(f"{out}/bucket=0")
+    assert persisted_n_buckets(spark, out) == 4
+    assert 0 not in committed_buckets(spark, out)
+
+    run_with_manifest(spark, load_transcripts(spark, inp), out, resume=True)
+    _assert_each_key_and_bucket_once(out, inp, 4)
+    assert {r[1] for r in _manifest_rows(out)} == {"completed"}
+
+
+def test_resume_state_reads_start_no_spark_job(spark, tmp_path, inp):
+    """The resume-state reads decode the manifest on the driver: no Spark
+    job, and the same answers as the committed rows."""
+    out = str(tmp_path / "out")
+    run_with_manifest(spark, load_transcripts(spark, inp), out, n_buckets=4)
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup())
+    assert committed_buckets(spark, out) == {0, 1, 2, 3}
+    assert persisted_n_buckets(spark, out) == 4
+    assert set(st.getJobIdsForGroup()) == before
+
+
+def test_corrupt_manifest_part_raises_not_resets_resume_state(spark, tmp_path, inp):
+    """A manifest part that does not decode (here one with no checksum
+    sidecar, as on a store without them) raises from every resume-state
+    read and from a resumed run, which re-extracts nothing; it is never
+    read as "no manifest"."""
+    out = str(tmp_path / "out")
+    run_with_manifest(spark, load_transcripts(spark, inp), out, n_buckets=4)
+    (part,) = glob.glob(f"{out}/_manifest/part-*.parquet")
+    os.remove(os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc"))
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    files = {f: os.path.getmtime(f) for f in glob.glob(f"{out}/bucket=*/*.parquet")}
+    with pytest.raises(pa.ArrowInvalid):
+        committed_buckets(spark, out)
+    with pytest.raises(pa.ArrowInvalid):
+        persisted_n_buckets(spark, out)
+    with pytest.raises(pa.ArrowInvalid):
+        run_with_manifest(spark, load_transcripts(spark, inp), out, resume=True)
+    assert {f: os.path.getmtime(f) for f in glob.glob(f"{out}/bucket=*/*.parquet")} == files

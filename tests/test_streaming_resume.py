@@ -42,10 +42,11 @@ def test_streaming_availablenow_resume(spark, tmp_path, pdfs):
 
 def test_foreachbatch_external_sink_and_no_duplicate_posts(spark, tmp_path, pdfs):
     """S8 webhook analog: the foreachBatch sink posts {batch_id, status,
-    metrics} to a pluggable callback after each batch's data write
-    (image-recognition.service.ts:445-482).  At-least-once delivery, and a
-    checkpoint resume re-posts no batch whose checkpoint commit was
-    written."""
+    metrics} to a pluggable callback once each batch's files and its
+    ``_batches/<batch_id>`` marker are committed
+    (image-recognition.service.ts:445-482).  A checkpoint resume re-posts
+    no batch; tests/test_drain_commit.py replays batches and kills the
+    drain inside one."""
     import json
 
     first, second = pdfs
