@@ -632,14 +632,19 @@ def load_transcripts(spark: SparkSession, path: str) -> DataFrame:
 
 
 def compact_output(spark: SparkSession, src: str, dst: str) -> dict:
-    """Small-file compaction of a committed extraction output — the table
-    maintenance a long-lived ingest target needs: every ``--resume`` batch
-    and every streaming trigger appends its own part files per bucket, and
-    scan-task scheduling over thousands of tiny files eventually dominates
-    read cost.  Rewrites the data so each bucket partition holds ONE file,
-    preserving rows bit-for-bit and carrying the manifest (and its pinned
+    """Small-file compaction of a committed, bucketed extraction output:
+    rewrites the data so each bucket partition holds ONE file, preserving
+    rows bit-for-bit and carrying the manifest (and its pinned
     ``n_buckets``) to the destination — ``--resume`` against the compacted
     output skips every bucket, exactly as against the original.
+    ``run_with_manifest`` itself leaves one file per bucket (a resumed or
+    rerun bucket's directory is replaced, not appended to), so this is for
+    outputs fragmented by other writers.
+
+    ``src`` must hold a manifest (``<src>/_manifest``): an output without
+    one, such as a drain's ``batch-*.parquet`` files, which carry no bucket
+    column, raises ``ValueError`` before any Spark job and creates nothing
+    at ``dst``.
 
     Writes to a NEW location: Spark cannot overwrite a path it is reading
     from (lazy scan during write), and a same-path rewrite would also
@@ -651,6 +656,11 @@ def compact_output(spark: SparkSession, src: str, dst: str) -> dict:
 
     Returns {"rows", "files_before", "files_after", "buckets"} — counts
     derived distributedly via input_file_name(), FS-agnostic."""
+    if not exists(spark, f"{src}/_manifest"):
+        raise ValueError(
+            f"{src} has no manifest (_manifest/): compaction rewrites a "
+            "bucketed run_with_manifest output, and a drain output has no buckets"
+        )
     df = spark.read.parquet(src)
     n_buckets = persisted_n_buckets(spark, src)
     files_before = df.select(F.input_file_name()).distinct().count()

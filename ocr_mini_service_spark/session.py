@@ -7,13 +7,23 @@ assumes everywhere (SURVEY.md §4.2):
   pathological 10 MB turns can't blow Python-worker memory
 - shuffle partitions sized to the local core count (on a real cluster this is
   set per-job via spark-submit --conf)
+- a local session's Python worker daemon is ``ocr_mini_service_spark.daemon``,
+  which imports PySpark from the installed, compiled copy instead of
+  compiling pyspark.zip's sources (≈1 s off each session's first Python
+  stage).  Under spark-submit Spark's own daemon stays: with ``--py-files``
+  the engine is not importable until the first task adds it.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+from . import daemon
+
+DAEMON_MODULE_CONF = "spark.python.daemon.module"
 
 
 def infer_shuffle_partitions(master: str, cpus: int) -> int:
@@ -42,7 +52,8 @@ def get_spark(
     # Under spark-submit the gateway JVM already carries --master / --conf
     # (PythonRunner exports PYSPARK_GATEWAY_PORT); forcing a master here
     # would fight the submit-time cluster URL, so inherit it instead.
-    under_submit = master is None and "PYSPARK_GATEWAY_PORT" in os.environ
+    gateway_up = "PYSPARK_GATEWAY_PORT" in os.environ
+    under_submit = master is None and gateway_up
     if not under_submit:
         master = master or f"local[{cpus}]"
     infer_width_from_cluster = under_submit and shuffle_partitions is None
@@ -52,6 +63,11 @@ def get_spark(
     b = SparkSession.builder.appName(app_name)
     if not under_submit:
         b = b.master(master)
+    if not gateway_up and (master == "local" or master.startswith("local[")):
+        # this process launches the JVM: the workers get its cwd and
+        # PYTHONPATH, so the daemon imports the engine wherever the engine's
+        # own tasks can (--py-files would only ship it with a task)
+        b = b.config(DAEMON_MODULE_CONF, daemon.__name__)
     b = (
         b
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -87,12 +103,14 @@ def env_report(spark: SparkSession) -> dict:
     (/root/reference/src/ocr/ocr.service.ts:23-92 reports temp dir, engine
     version, installed languages; here: engine versions, parallelism, the
     scale-critical confs, and the supported language set).  The Python
-    version and whether zip imports invalidate lazily are here because every
-    Python task's fixed cost depends on them."""
+    version, whether zip imports invalidate lazily and where the workers
+    import PySpark from (``worker_pyspark``: "installed" or "zip") are here
+    because every Python worker's fixed cost depends on them."""
     import platform
 
     import pandas
     import pyarrow
+    from pyspark.find_spark_home import _find_spark_home
 
     from . import lazy_zip_invalidation
     from .kernel import SUPPORTED_LANGUAGES
@@ -105,7 +123,14 @@ def env_report(spark: SparkSession) -> dict:
         "spark.sql.execution.arrow.maxRecordsPerBatch",
         "spark.sql.files.maxPartitionBytes",
         "spark.sql.session.timeZone",
+        DAEMON_MODULE_CONF,
     ]
+    # the workers' path as Spark's PythonWorkerFactory builds it: the zip
+    # ahead of everything the driver's interpreter finds
+    pyspark_zip = os.path.join(_find_spark_home(), "python", "lib", "pyspark.zip")
+    worker_path = [pyspark_zip, *sys.path]
+    if spark.conf.get(DAEMON_MODULE_CONF, None) == daemon.__name__:
+        worker_path = daemon.installed_pyspark_first(worker_path)
     return {
         "spark_version": spark.version,
         "master": sc.master,
@@ -113,6 +138,7 @@ def env_report(spark: SparkSession) -> dict:
         "python_worker": "arrow",  # no row-at-a-time UDFs anywhere (SURVEY §2.9)
         "python_version": platform.python_version(),
         "lazy_zip_invalidation": lazy_zip_invalidation(),
+        "worker_pyspark": "zip" if worker_path[0] == pyspark_zip else "installed",
         "pyarrow_version": pyarrow.__version__,
         "pandas_version": pandas.__version__,
         "conf": {k: spark.conf.get(k, None) for k in conf_keys},

@@ -222,3 +222,25 @@ def test_on_batch_raising_on_a_completed_payload_posts_no_failed(spark, arrivals
     _drain(spark, arrivals, tmp_path, spy)
     _assert_each_key_once(str(tmp_path / "out"))
     _assert_each_batch_posted_once(spy.posts())
+
+
+def test_compaction_refuses_a_drain_output(spark, arrivals, tmp_path):
+    """A drain output has no manifest and no bucket column: compaction
+    raises before any Spark job and creates nothing at its destination."""
+    from ocr_mini_service_spark.manifest import compact_output
+
+    two_batches = tmp_path / "in"
+    two_batches.mkdir()
+    for name in sorted(os.listdir(arrivals))[:20]:  # 16 files, then 4
+        shutil.copy(os.path.join(arrivals, name), two_batches)
+    spy = Spy(tmp_path / "posts.jsonl")
+    _drain(spark, str(two_batches), tmp_path, spy)
+    assert [p["batch_id"] for p in spy.posts()] == [0, 1]
+
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup())
+    dst = tmp_path / "compacted"
+    with pytest.raises(ValueError, match="has no manifest"):
+        compact_output(spark, str(tmp_path / "out"), str(dst))
+    assert set(st.getJobIdsForGroup()) == before
+    assert not dst.exists()

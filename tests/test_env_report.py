@@ -28,3 +28,5 @@ def test_env_report(spark):
     assert DEFAULT_LANGUAGE in r["languages"]
     assert r["python_version"] == platform.python_version()
     assert r["lazy_zip_invalidation"] is True
+    assert r["worker_pyspark"] == "installed"
+    assert r["conf"]["spark.python.daemon.module"] == "ocr_mini_service_spark.daemon"

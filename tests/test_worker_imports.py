@@ -103,6 +103,7 @@ def test_workers_invalidate_without_reading_zips(spark):
         .collect()
     )
     assert len(rows) == 4
-    # workers import pyspark from pyspark.zip, so there are archives to re-read
+    # the workers' sys.path still holds archives to re-read: py4j's, and
+    # pyspark.zip behind the installed pyspark as the fallback
     assert all(r.zip_importers > 0 for r in rows), rows
     assert all(r.lazy and r.reads == 0 for r in rows), rows
