@@ -5,24 +5,23 @@ and three result-delivery strategies (SSE / webhook / polling —
 /root/reference/src/ocr/image-recognition.service.ts:24, 310-326, 352-385,
 445-482).  The Spark re-expressions (SURVEY.md §2.8):
 
-- new transcript files arrive in a directory → ``readStream`` → the same
-  fused extraction → sink; ``Trigger.AvailableNow`` drains what exists and
-  stops (resumable drain ≅ the job lifecycle; checkpointLocation ≅ the
-  job-status map).
-- **webhook (S8)**: ``on_batch`` plugs an external per-batch callback into a
-  ``foreachBatch`` sink that writes and commits each micro-batch the way the
-  manifest job commits its buckets: one Spark job whose Python tasks
+- new transcript files arrive in a directory → ``readStream`` → one
+  ``foreachBatch`` sink that writes and commits each micro-batch the way
+  the manifest job commits its buckets: one Spark job whose Python tasks
   extract the raw rows and write their own Parquet files, then a commit on
-  the driver.  The callback receives ``{batch_id, status, n_turns,
-  n_words_kept, n_words_dropped, n_errors, timestamp}`` (the
-  ``WebhookPayload`` analog, return-strategy.types.ts:19-25) once the
-  batch's files are committed.  A ``_batches/<batch_id>`` marker, written
-  after the files and before the post, is the batch's commit point: a
+  the driver whose ``_batches/<batch_id>`` marker is the batch's commit
+  point.  ``Trigger.AvailableNow`` drains what exists and stops (resumable
+  drain ≅ the job lifecycle; checkpointLocation ≅ the job-status map).  A
   replay of a batch whose marker exists (a crash before the checkpoint
-  commit) writes and posts nothing, and a replay without one replaces the
-  batch's files.  So no batch's rows land twice and no ``batch_id`` is
-  posted twice as completed; the one window left is a crash after the
-  marker and before the post, which loses that post.
+  commit) writes nothing, and one without replaces the batch's files, so
+  no batch's rows land twice.  A crash after the renames and before the
+  marker leaves that batch's files readable until the replay replaces
+  them.
+- **webhook (S8)**: ``on_batch`` receives ``{batch_id, status, n_turns,
+  n_words_kept, n_words_dropped, n_errors, timestamp}`` (the
+  ``WebhookPayload`` analog, return-strategy.types.ts:19-25) after the
+  marker, so no ``batch_id`` is posted twice as completed; a crash after
+  the marker and before the post loses that post.
 - **SSE (S7)**: ``attach_progress_listener`` registers a
   ``StreamingQueryListener`` that appends one JSON progress line per
   micro-batch to a file — the SSE ``{type: 'progress', ...}`` event stream
@@ -47,7 +46,7 @@ from ..manifest import (
     _task_uri,
     _write_file,
 )
-from ..pipeline import extract_fused, input_columns
+from ..pipeline import input_columns
 from ..schema import TRANSCRIPTS
 
 
@@ -62,9 +61,8 @@ def run_incremental(
     """Drain all unprocessed transcript files into the extracted table.
     Returns the StreamingQuery (already awaited when available_now).
 
-    Without ``on_batch``, the exactly-once parquet file sink is used.  With
-    it, each micro-batch is one Spark job: its tasks extract the batch's
-    raw rows and write one Parquet file each under
+    Each micro-batch is one Spark job: its tasks extract the batch's raw
+    rows and write one Parquet file each under
     ``<output>/_staging/<batch_id>-<uuid>/`` (the manifest job's task
     writer, ``manifest._stage_bucket_files``, with a constant key), and
     return only their files' paths and counts.  The driver then commits
@@ -75,67 +73,71 @@ def run_incremental(
        number);
     2. it writes the ``<output>/_batches/<batch_id>`` marker, which holds
        the payload: the batch's commit point;
-    3. it posts the payload, summed from the tasks' counts.
+    3. with ``on_batch``, it posts the payload, summed from the tasks'
+       counts.
 
     A batch whose marker exists is a replay of a committed batch (a crash
     came before the checkpoint commit) and does nothing.  A failure before
-    the marker posts ``status="failed"`` and fails the query; an
-    ``on_batch`` that raises on the completed payload fails the query
-    without a second post.  A crash after the marker and before the post
-    loses that post and never doubles it."""
-    stream = (
+    the marker fails the query, after posting ``status="failed"`` when
+    there is an ``on_batch``; an ``on_batch`` that raises on the completed
+    payload fails the query without a second post.  A crash after the
+    marker and before the post loses that post and never doubles it.  A
+    crash during or after the renames and before the marker leaves that
+    batch's files readable until the replay replaces them.  An output
+    holding ``_spark_metadata/`` (Spark's file sink wrote it) is refused
+    before the query starts: Spark's reader would list only the files in
+    that log."""
+    return _drain(spark, _arrivals(spark, input_dir), output_dir, checkpoint_dir,
+                  available_now, on_batch)
+
+
+def _arrivals(spark: SparkSession, input_dir: str):
+    return (
         spark.readStream.schema(TRANSCRIPTS)
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
 
-    if on_batch is None:
-        writer = (
-            extract_fused(stream).writeStream.option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .format("parquet")
-            .option("path", output_dir)
-        )
-    else:
-        fs, out = _resolved_output(spark, output_dir)
-        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        staging_root = Path(out, "_staging")
-        fs.delete(staging_root, True)  # a killed drain's attempts
-        staging_uri = _task_uri(staging_root)
-        batches = Path(out, "_batches")
 
-        def _sink(bdf, batch_id: int) -> None:
-            marker = Path(batches, str(batch_id))
-            if fs.exists(marker):
-                return  # committed and posted before the checkpoint commit
-            try:
-                name = f"{batch_id}-{uuid.uuid4().hex}"
-                staged = bdf.select(
-                    *input_columns(bdf), F.lit(0).alias("bucket")
-                ).mapInArrow(
-                    functools.partial(_stage_bucket_files, staging=f"{staging_uri}/{name}"),
-                    _STAGED,
-                ).collect()
-                payload = _commit_batch(fs, out, Path(staging_root, name), marker,
-                                        int(batch_id), staged)
-            except Exception as e:  # failure path ≅ webhook status='failed'
-                on_batch(
-                    {
-                        "batch_id": int(batch_id),
-                        "status": "failed",
-                        "error": str(e),
-                        "timestamp": time.time(),
-                    }
-                )
-                raise
-            on_batch(payload)
+def _drain(spark, stream, output_dir, checkpoint_dir, available_now, on_batch):
+    """Run ``stream`` into ``output_dir`` through the committing
+    ``foreachBatch`` sink that ``run_incremental`` describes."""
+    fs, out = _resolved_output(spark, output_dir)
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    if fs.exists(Path(out, "_spark_metadata")):
+        raise ValueError(f"{out} holds _spark_metadata/ (Spark's file sink wrote it): "
+                         f"Spark's reader would not list the drain's batch files")
+    staging_root = Path(out, "_staging")
+    fs.delete(staging_root, True)  # a killed drain's attempts
+    staging_uri = _task_uri(staging_root)
+    batches = Path(out, "_batches")
+    post = on_batch or (lambda payload: None)
 
-        writer = (
-            stream.writeStream.option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .foreachBatch(_sink)
-        )
+    def _sink(bdf, batch_id: int) -> None:
+        marker = Path(batches, str(batch_id))
+        if fs.exists(marker):
+            return  # committed (and posted) before the checkpoint commit
+        try:
+            name = f"{batch_id}-{uuid.uuid4().hex}"
+            staged = bdf.select(
+                *input_columns(bdf), F.lit(0).alias("bucket")
+            ).mapInArrow(
+                functools.partial(_stage_bucket_files, staging=f"{staging_uri}/{name}"),
+                _STAGED,
+            ).collect()
+            payload = _commit_batch(fs, out, Path(staging_root, name), marker,
+                                    int(batch_id), staged)
+        except Exception as e:  # failure path ≅ webhook status='failed'
+            post({"batch_id": int(batch_id), "status": "failed",
+                  "error": str(e), "timestamp": time.time()})
+            raise
+        post(payload)
 
+    writer = (
+        stream.writeStream.option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .foreachBatch(_sink)
+    )
     if available_now:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
@@ -386,30 +388,19 @@ def run_enriched_stream(
     against a fixed-size dimension table (conv_id -> lang, the reference's
     per-request ``language`` option lifted to a routing table,
     ocr.service.ts:149-153) BEFORE the extraction kernel, so the joined
-    column drives the kernel's per-turn language seam.  This is the
-    standard stream-static broadcast pattern: the static side is planned
-    into every micro-batch as a broadcast hash join — no state store, no
-    watermark, nothing accumulates across batches; at production scale the
-    dimension re-broadcasts per batch and the stream side never shuffles.
+    column drives the kernel's per-turn language seam (``input_columns``
+    passes it to the write tasks).  This is the standard stream-static
+    broadcast pattern: the static side is planned into every micro-batch
+    as a broadcast hash join — no state store, no watermark, nothing
+    accumulates across batches; at production scale the dimension
+    re-broadcasts per batch and the stream side never shuffles.
 
-    AvailableNow drain; returns the finished StreamingQuery.  The
-    checkpoint carries file progress, so a resumed drain never re-extracts
-    (and never re-joins) a completed batch."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
-    enriched = stream.join(
+    AvailableNow drain through ``run_incremental``'s sink and commit, with
+    no ``on_batch``; returns the finished StreamingQuery.  The checkpoint
+    carries file progress, so a resumed drain never re-extracts (and never
+    re-joins) a completed batch."""
+    enriched = _arrivals(spark, input_dir).join(
         F.broadcast(lang_dim.select("conv_id", "lang")), "conv_id", "left"
     )
-    extracted = extract_fused(enriched)
-    writer = (
-        extracted.writeStream.option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    return q
+    return _drain(spark, enriched, output_dir, checkpoint_dir,
+                  available_now=True, on_batch=None)

@@ -1,11 +1,13 @@
-"""The webhook drain (``run_incremental(on_batch=...)``) commits each
+"""The drain (``run_incremental``, with or without ``on_batch``) commits each
 micro-batch once: its files land once and its ``batch_id`` is posted once as
-completed, after a kill inside a micro-batch, a replay with or without the
-batch's ``_batches/<batch_id>`` marker, or a callback that raises."""
+completed, after a kill inside a micro-batch, a failed task attempt, a
+replay with or without the batch's ``_batches/<batch_id>`` marker, or a
+callback that raises."""
 
 import glob
 import json
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -19,6 +21,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 
 from ocr_mini_service_spark.pipeline import _arrow_extracted_schema
+from ocr_mini_service_spark.schema import TRANSCRIPTS
 from ocr_mini_service_spark.streaming import run_incremental
 from ocr_mini_service_spark.synth import gen_transcripts
 
@@ -244,3 +247,105 @@ def test_compaction_refuses_a_drain_output(spark, arrivals, tmp_path):
         compact_output(spark, str(tmp_path / "out"), str(dst))
     assert set(st.getJobIdsForGroup()) == before
     assert not dst.exists()
+
+
+def test_plain_drain_commits_and_replays_its_own_files(spark, arrivals, tmp_path):
+    """Without ``on_batch`` the drain commits as the webhook drain does:
+    ``batch-*`` files and one ``_batches/<batch_id>`` marker per batch,
+    every key once.  A replay of batch 2 without its marker replaces batch
+    2's files, one an earlier, larger attempt left included, and leaves
+    the other batches' files alone."""
+    _drain(spark, arrivals, tmp_path, None)
+    out = str(tmp_path / "out")
+    _assert_each_key_once(out)
+    assert sorted(glob.glob("[!.]*", root_dir=f"{out}/_batches")) == ["0", "1", "2"]
+    assert not os.path.exists(f"{out}/_spark_metadata")
+    others = {f: os.path.getmtime(f) for f in glob.glob(f"{out}/batch-0000[01]-*.parquet")}
+    batch2 = sorted(glob.glob(f"{out}/batch-00002-*.parquet"))
+    assert others and batch2
+    planted = f"{out}/batch-00002-{len(batch2) + 3:05d}.parquet"
+    shutil.copy(batch2[0], planted)
+    for f in (f"{out}/_batches/2", f"{out}/_batches/.2.crc"):
+        os.remove(f)
+    _forget_checkpoint_commit(tmp_path / "ckpt", 2)
+
+    _drain(spark, arrivals, tmp_path, None)
+    assert os.path.exists(f"{out}/_batches/2")
+    _assert_each_key_once(out)
+    assert {f: os.path.getmtime(f) for f in others} == others
+    assert not os.path.exists(planted)
+    assert not os.path.exists(f"{out}/_staging")
+
+
+def test_drain_refuses_an_output_sparks_file_sink_wrote(spark, arrivals, tmp_path):
+    """Spark's reader lists only the files in an output's
+    ``_spark_metadata/`` log, so the drain's batch files would be invisible
+    in an output Spark's file sink wrote: the drain refuses it, naming the
+    directory, before its query starts."""
+    out = tmp_path / "out"
+    spark.readStream.schema(TRANSCRIPTS).parquet(arrivals).writeStream.format(
+        "parquet"
+    ).option("path", str(out)).option(
+        "checkpointLocation", str(tmp_path / "file_sink_ckpt")
+    ).trigger(availableNow=True).start().awaitTermination()
+    before = sorted(os.listdir(out))
+    assert "_spark_metadata" in before
+
+    with pytest.raises(ValueError, match=re.escape(str(out)) + ".*_spark_metadata"):
+        _drain(spark, arrivals, tmp_path, None)
+    assert not (tmp_path / "ckpt").exists()
+    assert sorted(os.listdir(out)) == before
+
+
+_RETRY_CHILD = """
+import json, os, sys, types, uuid
+from ocr_mini_service_spark import streaming
+from ocr_mini_service_spark.session import get_spark
+
+inp, out, ckpt, spy = sys.argv[1:]
+
+def trapped_uuid4():
+    u = uuid.uuid4()
+    streaming.uuid = uuid  # only batch 0's staging name is trapped
+    d = f"{out}/_staging/0-{u.hex}/0-0"
+    os.makedirs(d)
+    open(f"{d}/bucket=0", "w").close()
+    return u
+
+def post(payload):
+    with open(spy, "a") as f:
+        f.write(json.dumps(payload) + "\\n")
+
+streaming.uuid = types.SimpleNamespace(uuid4=trapped_uuid4)
+spark = get_spark(master="local[4,2]")
+q = streaming.run_incremental(spark, inp, out, ckpt, on_batch=post)
+st = spark.sparkContext.statusTracker()
+stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(str(q.runId))
+          for s in st.getJobInfo(j).stageIds]
+print(json.dumps({"failed_tasks": sum(s.numFailedTasks for s in stages if s)}))
+spark.stop()
+"""
+
+
+def test_failed_task_attempt_inside_a_micro_batch_lands_and_posts_once(arrivals, tmp_path):
+    """Under local[4,2] a failed task is retried once.  Partition 0's first
+    attempt in batch 0 fails: a file stands where its ``0-0/bucket=0/``
+    staging directory goes, planted when the batch's staging name is drawn
+    through the ``uuid`` module the streaming module uses.  The commit
+    takes only the retry's file, so every key lands once and each batch is
+    posted once as completed.  The drain runs in a child process because
+    the test session is ``local[4]``, where a failed task fails the job."""
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    spy = Spy(tmp_path / "posts.jsonl")
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRY_CHILD, arrivals, str(out), str(ckpt), spy.path],
+        capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert json.loads(r.stdout.strip().splitlines()[-1]) == {"failed_tasks": 1}
+    assert "FileExistsError" in r.stderr
+    _assert_each_key_once(str(out))
+    _assert_each_batch_posted_once(spy.posts())
+    assert [p["status"] for p in spy.posts()] == ["completed"] * 3
+    assert not os.path.exists(f"{out}/_staging")
